@@ -171,8 +171,11 @@ class DmlStatements:
             *[F.col(n).cast(t).alias(n) for (n, _), t in zip(df.dtypes, target_types)]
         )
         self._validate_view(manifest, stmt.name, casted)
-        self.catalog.stage_delta(manifest, stmt.name, upserts=casted)
-        n = casted.count()
+        # the rows become the base, not a first delta; the count comes from
+        # the written files' footers instead of running the query again
+        data = self.catalog.write_snapshot(stmt.name, casted)
+        manifest["tables"][stmt.name]["data"] = data
+        n = self.catalog.count_rows(data)
         return Result(status=f"CREATE TABLE {stmt.name} AS ({n} rows)")
 
     # ---------------------------------------------------------- UPDATE

@@ -79,7 +79,8 @@ def get_spark(app_name: str = "entangledb-spark", ansi: bool = True) -> SparkSes
     return spark
 
 
-_LAST_GATEWAY_ID: list = [None]
+# weakref.ref to the gateway the memoized templates were built against
+_LAST_GATEWAY: list = [None]
 
 
 def _guard_expr_memo(spark: SparkSession) -> None:
@@ -88,16 +89,21 @@ def _guard_expr_memo(spark: SparkSession) -> None:
     @expr_template caches hold Column objects bound to one JVM gateway —
     safe under the normal one-JVM-per-process lifecycle, but a process
     that stopped and relaunched the gateway would be served stale
-    JavaObjects. Key the guard on the live gateway's identity."""
+    JavaObjects. The guard holds a weak reference to the last gateway, not
+    its ``id()``: CPython may hand a collected gateway's id to its
+    replacement, while a dead weak reference never matches."""
+    import weakref
+
     from entangledb_spark.functions import exprmemo
 
     try:
-        gid = id(spark.sparkContext._gateway)
+        gw = spark.sparkContext._gateway
     except Exception:  # pragma: no cover — no JVM gateway to go stale
         return
-    if _LAST_GATEWAY_ID[0] is not None and _LAST_GATEWAY_ID[0] != gid:
+    last = _LAST_GATEWAY[0]
+    if last is not None and last() is not gw:
         exprmemo.clear_all()
-    _LAST_GATEWAY_ID[0] = gid
+    _LAST_GATEWAY[0] = weakref.ref(gw)
 
 
 def load_tables(

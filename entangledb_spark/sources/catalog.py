@@ -18,12 +18,15 @@ Layout:
     base/
       manifests/v{N}.json     immutable manifests
       CURRENT                 text file: latest committed N (atomic replace)
-      data/{table}/{uuid}/    immutable parquet snapshots
+      data/{table}/{uuid}/    immutable parquet file sets
 
-Scale notes: a manifest is O(#tables); data snapshots are full-table
-rewrites here (correct + simple); the production evolution is delta files
-with compaction, which changes only `write_snapshot`/`read_df` — the
-manifest/commit protocol is already the Delta-style transaction-log shape.
+A table entry names a base file set (``data``; CREATE TABLE AS writes it,
+a table born empty has none until its first compaction) and a chain of up
+to COMPACT_AFTER delta entries, each an upsert and/or a PK-tombstone file
+set. DML writes only the changed rows as a new delta; a read resolves the
+chain in at most three scans — base, all upserts, all tombstones — and one
+window on the PK (``_resolve``). Compaction folds the chain into a new
+base, so read amplification stays bounded.
 """
 
 from __future__ import annotations
@@ -207,52 +210,75 @@ class SnapshotCatalog:
 
     # ---- table data (merge-on-read) ----------------------------------------
     #
-    # A table version is a base snapshot plus an ordered list of delta
+    # A table version is a base snapshot (``data``, absent until the first
+    # compaction of a table born empty) plus an ordered chain of delta
     # entries, each holding `upserts` (full rows) and/or `deletes` (PK
-    # tombstones). Mutations write O(changed rows), not O(table) — the
-    # property that makes DML viable on a 100 TB table. Reads resolve the
-    # latest row per PK with one window pass (single shuffle on the PK);
-    # after COMPACT_AFTER deltas the full view is rewritten as a new base
-    # so read amplification stays bounded. This is the Delta-Lake /
-    # Iceberg merge-on-read shape in miniature.
+    # tombstones) in its own directory. Mutations write O(changed rows),
+    # not O(table) — the property that makes DML viable on a 100 TB table.
+    # `_resolve` reads a chain in at most three scans — the base, ONE scan
+    # of every upsert directory and ONE of every tombstone directory, each
+    # row ranked by the directory its file sits in — then keeps the latest
+    # row per PK with one window pass (single shuffle on the PK). After
+    # COMPACT_AFTER deltas the view is rewritten as a new base, so read
+    # amplification stays bounded. This is the Delta-Lake / Iceberg
+    # merge-on-read shape in miniature.
 
     COMPACT_AFTER = 8
 
     def _pk_of(self, meta: dict) -> str:
         return next(c["name"] for c in meta["columns"] if c["primary_key"])
 
-    def _read_path(self, rel: str, columns: list[dict]) -> DataFrame:
-        """Read a managed-table file set: scan with the PHYSICAL schema
-        (what the files store), surface LOGICAL names, and fill columns
-        ADDed after the files were written — a missing column reads as
-        NULL, so a NOT NULL ADD COLUMN's ``initial_default`` coalesces it
-        exactly (no genuine NULL can exist under the constraint). Rename
-        aliases and the coalesce are narrow projections Catalyst pushes
-        scans/filters through, so pruning is unaffected."""
-        df = self.spark.read.schema(schema_of(columns, physical=True)).parquet(
-            os.path.join(self.base, rel)
-        )
+    def _read_path(
+        self, rels, columns: list[dict], ranks: Optional[dict] = None
+    ) -> DataFrame:
+        """Read a managed-table file set — one manifest-relative directory
+        or a list of them, as ONE scan: scan with the PHYSICAL schema (what
+        the files store), surface LOGICAL names, and fill columns ADDed
+        after the files were written — a missing column reads as NULL, so
+        a NOT NULL ADD COLUMN's ``initial_default`` coalesces it exactly
+        (no genuine NULL can exist under the constraint). Rename aliases
+        and the coalesce are narrow projections Catalyst pushes
+        scans/filters through, so pruning is unaffected.
+
+        ``ranks`` ({rel: rank}) adds an int ``__rank`` column naming the
+        directory each row was read from: a CASE over the hidden
+        ``_metadata.file_path`` keyed by the directories' unique names
+        (``metadataColumn`` reaches it even when the table has a user
+        column called ``_metadata``)."""
         from pyspark.sql import functions as F
 
+        rels = [rels] if isinstance(rels, str) else list(rels)
+        reader = self.spark.read.schema(schema_of(columns, physical=True))
+        if len(rels) > 1:
+            # each directory of a partition_by table is its own Hive
+            # partition root; without this Spark rejects several roots as
+            # "conflicting directory structures"
+            reader = reader.option("ignoreInvalidPartitionPaths", "true")
+        df = reader.parquet(*[os.path.join(self.base, r) for r in rels])
         # rename stored → logical BY NAME: a partitioned read emits the
         # partition column LAST regardless of the supplied schema order,
         # so a positional rename would scramble columns
-        df = df.select(
-            *[F.col(physical_name(c)).alias(c["name"]) for c in columns]
-        )
-
+        out = []
         for c in columns:
+            col = F.col(physical_name(c))
             if c.get("initial_default") is not None:
-                df = df.withColumn(
-                    c["name"],
-                    F.coalesce(
-                        F.col(c["name"]),
-                        F.lit(c["initial_default"]).cast(
-                            SPARK_TYPES[c["datatype"]]
-                        ),
-                    ),
-                )
-        return df
+                col = F.coalesce(
+                    col, F.lit(c["initial_default"]).cast(SPARK_TYPES[c["datatype"]])
+                ).alias(c["name"])
+            elif physical_name(c) != c["name"]:
+                col = col.alias(c["name"])
+            out.append(col)
+        if ranks:
+            if len(set(ranks.values())) == 1:
+                rank = F.lit(next(iter(ranks.values())))
+            else:
+                path = df.metadataColumn("_metadata").getField("file_path")
+                rank = None
+                for rel, i in ranks.items():
+                    hit = path.contains(f"/{os.path.basename(rel)}/")
+                    rank = F.when(hit, i) if rank is None else rank.when(hit, i)
+            out.append(rank.alias("__rank"))
+        return df.select(*out)
 
     def _to_physical(self, df: DataFrame, columns: list[dict]) -> DataFrame:
         """Rename a logical-named frame to stored names before a file
@@ -267,6 +293,66 @@ class SnapshotCatalog:
             ]
         )
 
+    def _resolve(
+        self,
+        t: dict,
+        deltas: list,
+        base: Optional[str],
+        predicate=None,
+        keep_tombstones: bool = False,
+    ) -> DataFrame:
+        """The merge-on-read view of table entry ``t``: ``base`` (rank 0)
+        under ``deltas`` (rank 1..n), in at most three scans. The latest
+        rank wins per PK; at equal rank an upsert beats a tombstone
+        (UPDATE pk=pk+1 writes both in one delta). ``predicate`` filters
+        the base and upsert scans below the window (see read_df_pruned).
+        ``keep_tombstones`` keeps a PK whose latest version is a tombstone
+        and returns the ``__del`` flag (the change feed's net changes)."""
+        from functools import reduce
+
+        from pyspark.sql import Window, functions as F
+
+        cols_meta = t["columns"]
+        if not deltas:
+            if base is None:
+                return self.spark.createDataFrame([], schema_of(cols_meta))
+            df = self._read_path(base, cols_meta)
+            return df if predicate is None else df.filter(predicate)
+        pk = self._pk_of(t)
+
+        def ranks(kind: str) -> dict:
+            return {d[kind]: i for i, d in enumerate(deltas, start=1) if d.get(kind)}
+
+        parts = []
+        if base is not None:
+            parts.append(self._read_path(base, cols_meta).withColumn("__rank", F.lit(0)))
+        upserts = ranks("upserts")
+        if upserts:
+            parts.append(self._read_path(list(upserts), cols_meta, upserts))
+        if predicate is not None:
+            parts = [p.filter(predicate) for p in parts]
+        parts = [p.withColumn("__del", F.lit(False)) for p in parts]
+        deletes = ranks("deletes")
+        if deletes:
+            tomb = self._read_path(
+                list(deletes), [c for c in cols_meta if c["primary_key"]], deletes
+            )
+            cols = [
+                F.col(pk) if f.name == pk else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema_of(cols_meta).fields
+            ]
+            parts.append(tomb.select(*cols, "__rank", F.lit(True).alias("__del")))
+        merged = reduce(DataFrame.unionByName, parts)
+        w = Window.partitionBy(pk).orderBy(F.col("__rank").desc(), F.col("__del").asc())
+        keep = F.col("__rn") == 1
+        drop = ["__rank", "__rn"]
+        if not keep_tombstones:
+            keep = keep & ~F.col("__del")
+            drop.append("__del")
+        return (
+            merged.withColumn("__rn", F.row_number().over(w)).filter(keep).drop(*drop)
+        )
+
     def read_df(self, manifest: dict, name: str) -> DataFrame:
         t = manifest["tables"].get(name)
         if t is None:
@@ -277,67 +363,23 @@ class SnapshotCatalog:
             from entangledb_spark.sources.parquet_io import read_parquet_any
 
             return read_parquet_any(self.spark, t["external"])
-        cols_meta = t["columns"]
-        schema = schema_of(cols_meta)
-        deltas = t.get("deltas", [])
-        if t["data"] is None and not deltas:
-            return self.spark.createDataFrame([], schema)
-        base = (
-            self._read_path(t["data"], cols_meta)
-            if t["data"] is not None
-            else self.spark.createDataFrame([], schema)
-        )
-        if not deltas:
-            return base
-        from pyspark.sql import Window, functions as F
-
-        pk = self._pk_of(t)
-        pk_cols = [c for c in cols_meta if c["primary_key"]]
-        parts = [base.withColumn("__rank", F.lit(0)).withColumn("__del", F.lit(False))]
-        for i, d in enumerate(deltas, start=1):
-            if d.get("upserts"):
-                parts.append(
-                    self._read_path(d["upserts"], cols_meta)
-                    .withColumn("__rank", F.lit(i))
-                    .withColumn("__del", F.lit(False))
-                )
-            if d.get("deletes"):
-                tomb = self._read_path(d["deletes"], pk_cols)
-                for c in schema.fieldNames():
-                    if c != pk:
-                        tomb = tomb.withColumn(c, F.lit(None).cast(schema[c].dataType))
-                parts.append(
-                    tomb.select(*schema.fieldNames())
-                    .withColumn("__rank", F.lit(i))
-                    .withColumn("__del", F.lit(True))
-                )
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        # latest version of each PK wins; at equal rank an upsert beats a
-        # tombstone (UPDATE pk=pk+1 writes both in one delta)
-        w = Window.partitionBy(pk).orderBy(F.col("__rank").desc(), F.col("__del").asc())
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (~F.col("__del")))
-            .drop("__rank", "__del", "__rn")
-        )
+        return self._resolve(t, t.get("deltas", []), t["data"])
 
     def read_df_pruned(self, manifest: dict, name: str, predicate) -> DataFrame:
         """Merge-on-read view of ``name`` with ``predicate`` (a Column over
-        the table's partition column(s)) applied to EVERY part — base and
-        each delta — BEFORE the pk-version window, so partition pruning
-        happens at the parquet source instead of being blocked above the
-        window (Catalyst won't push a non-window-key filter through it).
+        the table's partition column(s)) applied to the base and upsert
+        scans BEFORE the pk-version window, so partition pruning happens
+        at the parquet source instead of being blocked above the window
+        (Catalyst won't push a non-window-key filter through it).
 
         Sound only when the predicate's columns are functionally
         determined by the pk and every writer maintains them consistently
         (all versions of a pk live in the same partition) — exactly the
         contract of a declared ``partition_by`` column like the
-        fp-prefix bucket in streaming/corpus_dedup.py. Parts that lack
-        the predicate's columns (pk-only tombstones) are left unfiltered:
-        a surviving tombstone for an unprobed pk deletes a row the caller
-        wasn't asking about, which the merge semantics already handle."""
+        fp-prefix bucket in streaming/corpus_dedup.py. The tombstone scan
+        (pk-only) is left unfiltered: a surviving tombstone for an
+        unprobed pk deletes a row the caller wasn't asking about, which
+        the merge semantics already handle."""
         t = manifest["tables"].get(name)
         if t is None:
             raise CatalogError(f"table {name} does not exist")
@@ -349,48 +391,7 @@ class SnapshotCatalog:
             from entangledb_spark.sources.parquet_io import read_parquet_any
 
             return read_parquet_any(self.spark, t["external"]).filter(predicate)
-        cols_meta = t["columns"]
-        schema = schema_of(cols_meta)
-        deltas = t.get("deltas", [])
-        if t["data"] is None and not deltas:
-            return self.spark.createDataFrame([], schema)
-        from pyspark.sql import Window, functions as F
-
-        pk = self._pk_of(t)
-        pk_cols = [c for c in cols_meta if c["primary_key"]]
-        base = (
-            self._read_path(t["data"], cols_meta).filter(predicate)
-            if t["data"] is not None
-            else self.spark.createDataFrame([], schema)
-        )
-        parts = [base.withColumn("__rank", F.lit(0)).withColumn("__del", F.lit(False))]
-        for i, d in enumerate(deltas, start=1):
-            if d.get("upserts"):
-                parts.append(
-                    self._read_path(d["upserts"], cols_meta)
-                    .filter(predicate)
-                    .withColumn("__rank", F.lit(i))
-                    .withColumn("__del", F.lit(False))
-                )
-            if d.get("deletes"):
-                tomb = self._read_path(d["deletes"], pk_cols)
-                for c in schema.fieldNames():
-                    if c != pk:
-                        tomb = tomb.withColumn(c, F.lit(None).cast(schema[c].dataType))
-                parts.append(
-                    tomb.select(*schema.fieldNames())
-                    .withColumn("__rank", F.lit(i))
-                    .withColumn("__del", F.lit(True))
-                )
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        w = Window.partitionBy(pk).orderBy(F.col("__rank").desc(), F.col("__del").asc())
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (~F.col("__del")))
-            .drop("__rank", "__del", "__rn")
-        )
+        return self._resolve(t, t.get("deltas", []), t["data"], predicate)
 
     def write_snapshot(
         self, name: str, df: DataFrame, partition_by: Optional[list] = None
@@ -726,7 +727,7 @@ class SnapshotCatalog:
         to a full snapshot diff: one null-safe full-outer join on PK.
         Deletes carry the pre-image row; inserts/updates the post-image.
         """
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import functions as F
 
         if from_v > to_v:
             raise CatalogError(f"changes: from_version {from_v} > to_version {to_v}")
@@ -765,36 +766,9 @@ class SnapshotCatalog:
             tail = new_deltas[len(old_deltas):]
             if not tail:
                 return empty()
-            # resolve the tail to one net (row, __del) per PK — same
-            # latest-wins window as read_df, over O(changed rows) only
-            pk_cols = [c for c in t_new["columns"] if c["primary_key"]]
-            parts = []
-            for i, d in enumerate(tail, start=1):
-                if d.get("upserts"):
-                    parts.append(
-                        self._read_path(d["upserts"], t_new["columns"])
-                        .withColumn("__rank", F.lit(i))
-                        .withColumn("__del", F.lit(False))
-                    )
-                if d.get("deletes"):
-                    tomb = self._read_path(d["deletes"], pk_cols)
-                    for c in cols:
-                        if c != pk:
-                            tomb = tomb.withColumn(c, F.lit(None).cast(schema[c].dataType))
-                    parts.append(
-                        tomb.select(*cols)
-                        .withColumn("__rank", F.lit(i))
-                        .withColumn("__del", F.lit(True))
-                    )
-            net = parts[0]
-            for p in parts[1:]:
-                net = net.unionByName(p)
-            w = Window.partitionBy(pk).orderBy(F.col("__rank").desc(), F.col("__del").asc())
-            net = (
-                net.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rank", "__rn")
-            )
+            # resolve the tail to one net (row, __del) per PK — the same
+            # chain resolve as read_df, over O(changed rows) only
+            net = self._resolve(t_new, tail, None, keep_tombstones=True)
             old_view = self.read_df(man_old, name)
             existed = old_view.select(F.col(pk).alias("__opk")).withColumn(
                 "__existed", F.lit(True)

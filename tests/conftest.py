@@ -29,16 +29,24 @@ def _slow_node_ids() -> frozenset[str]:
         return frozenset()
 
 
+def manifest_id(nodeid: str) -> str:
+    """``nodeid`` in the manifest's repo-root-relative form. Pytest names a
+    test relative to its rootdir: run from outside the repo root, the path
+    carries a prefix; run from inside ``tests/``, it lacks ``tests/``."""
+    path, sep, rest = nodeid.partition("::")
+    if not path.startswith("tests/"):
+        cut = path.find("/tests/")
+        path = path[cut + 1 :] if cut >= 0 else "tests/" + path
+    return path + sep + rest
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_node_ids()
     if not slow:
         return
     marker = pytest.mark.slow
     for item in items:
-        nodeid = item.nodeid
-        # Normalize: invocations from outside the repo root prefix the path.
-        tail = nodeid[nodeid.find("tests/") :] if "tests/" in nodeid else nodeid
-        if nodeid in slow or tail in slow:
+        if item.nodeid in slow or manifest_id(item.nodeid) in slow:
             item.add_marker(marker)
 
 
