@@ -17,10 +17,14 @@ mod.rs:79-143) onto the snapshot catalog:
   (numOutputRows, spill, shuffle bytes, pipeline time) plus the row
   count and wall time — queries only, DML is rejected.
 
-DML is set-oriented and distributed end-to-end: INSERT/UPDATE/DELETE read
-the pinned snapshot, transform declaratively, constraint-check with
-aggregate/anti-join passes, and write a new immutable snapshot. No
-driver-side row loops anywhere.
+DML is set-oriented and distributed end-to-end: INSERT/UPDATE/DELETE/MERGE
+read the pinned snapshot, transform declaratively, and stage only the
+changed rows as a merge-on-read delta. Constraints are checked on that
+delta against the pre-image the statement read (sources/constraints.py):
+the written rows, and the keys it removes, never the whole table — so a
+1-row write costs a bounded probe, not O(table). No row loops over table
+data in Python anywhere; literal VALUES rows, already Python tuples, are
+checked as such.
 """
 
 from __future__ import annotations
@@ -531,24 +535,14 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
     def _pk_of(self, meta: dict) -> str:
         return next(c["name"] for c in meta["columns"] if c["primary_key"])
 
-    def _validate_view(self, manifest: dict, name: str, candidate: DataFrame) -> None:
-        """Run every constraint against the candidate full-table view (the
-        state that WOULD be current if the mutation commits). The view is a
-        lazy plan — checks are distributed jobs, the view itself is never
-        materialized on the driver."""
-        meta = self._table_meta(manifest, name)
-        cols = meta["columns"]
-        con.check_not_null_and_length(name, candidate, cols)
-        con.check_unique(name, candidate, cols)
-
-        def target_df_and_pk(tname: str):
-            if tname == name:
-                return candidate, self._pk_of(meta)
-            tmeta = self._table_meta(manifest, tname)
-            return self.catalog.read_df(manifest, tname), self._pk_of(tmeta)
-
-        con.check_foreign_keys(name, candidate, cols, target_df_and_pk)
-
+    def _check_delta(self, manifest: dict, name: str, delta: con.Delta) -> None:
+        """Check what one statement's change to ``name`` can newly violate
+        (sources/constraints.py), against the pending manifest. The checks
+        are distributed jobs over the change, or none at all; the table
+        view itself is never collected into Python."""
+        con.check_delta(
+            name, manifest["tables"], delta, lambda t: self.catalog.read_df(manifest, t)
+        )
 
 
 def _is_constant_query(stmt: ast.Statement) -> bool:

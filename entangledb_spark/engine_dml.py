@@ -80,10 +80,17 @@ class DmlStatements:
         schema = schema_of(
             [dict(c, nullable=True) for c in cols]  # NULL checks run separately
         )
-        new_rows = self.spark.createDataFrame(rows, schema)
-        existing = self.catalog.read_df(manifest, stmt.table)
-        combined = existing.unionByName(new_rows)
-        self._validate_view(manifest, stmt.table, combined)
+        # one partition: the delta is one parquet file, not one per slice
+        new_rows = self.spark.createDataFrame(rows, schema).coalesce(1)
+        self._check_delta(
+            manifest,
+            stmt.table,
+            con.Delta(
+                upserts=new_rows,
+                kept=self.catalog.read_df(manifest, stmt.table),
+                rows=rows,
+            ),
+        )
         # merge-on-read: only the new rows hit disk (O(inserted), not O(table))
         self.catalog.stage_delta(manifest, stmt.table, upserts=new_rows)
         return Result(status=f"INSERT {len(rows)}")
@@ -134,9 +141,11 @@ class DmlStatements:
                     f"no value given for column {c['name']} in table {stmt.table}"
                 )
         new_rows = src_df.select(*out_cols)
-        existing = self.catalog.read_df(manifest, stmt.table)
-        combined = existing.unionByName(new_rows)
-        self._validate_view(manifest, stmt.table, combined)
+        self._check_delta(
+            manifest,
+            stmt.table,
+            con.Delta(upserts=new_rows, kept=self.catalog.read_df(manifest, stmt.table)),
+        )
         delta = self.catalog.stage_delta(manifest, stmt.table, upserts=new_rows)
         n_new = self.catalog.count_rows(delta["upserts"]) if delta else 0
         return Result(status=f"INSERT {n_new}")
@@ -170,7 +179,7 @@ class DmlStatements:
         casted = df.select(
             *[F.col(n).cast(t).alias(n) for (n, _), t in zip(df.dtypes, target_types)]
         )
-        self._validate_view(manifest, stmt.name, casted)
+        self._check_delta(manifest, stmt.name, con.Delta(upserts=casted))
         # the rows become the base, not a first delta; the count comes from
         # the written files' footers instead of running the query again
         data = self.catalog.write_snapshot(stmt.name, casted)
@@ -243,13 +252,29 @@ class DmlStatements:
             else:
                 projected.append(F.col(c))
         out = flagged.select(*projected, F.col("__upd"))
-        self._validate_view(manifest, stmt.table, out.drop("__upd"))
         # merge-on-read: write only the changed rows; if the PK itself was
         # assigned, tombstone the old keys in the same delta (upsert wins at
         # equal rank, so UPDATE pk=pk+1 overlaps resolve correctly)
         pk = self._pk_of(meta)
         changed = out.filter(F.col("__upd")).drop("__upd")
         old_keys = flagged.filter(F.col("__upd")).select(pk) if pk in updates else None
+        self._check_delta(
+            manifest,
+            stmt.table,
+            con.Delta(
+                upserts=changed,
+                kept=out.filter(~F.col("__upd")).drop("__upd"),
+                removed=(
+                    old_keys.join(changed.select(pk), on=pk, how="left_anti")
+                    if old_keys is not None
+                    else None
+                ),
+                columns=frozenset(updates),
+                literals={
+                    c: e.value for c, e in stmt.sets if isinstance(e, ast.Literal)
+                },
+            ),
+        )
         delta = self.catalog.stage_delta(
             manifest, stmt.table, upserts=changed, deletes=old_keys
         )
@@ -483,19 +508,10 @@ class DmlStatements:
                     )
             insert_rows = not_matched.select(*out_cols)
 
-        final_view = survivors.drop("__upd")
-        if insert_rows is not None:
-            final_view = final_view.unionByName(insert_rows)
-        self._validate_view(manifest, stmt.target, final_view)
-
         changed = survivors.filter(F.col("__upd")).drop("__upd")
-        n_upd = changed.count() if upd is not None else 0
-        n_ins = insert_rows.count() if insert_rows is not None else 0
         del_keys = None
-        n_del = 0
         if dele is not None:
             del_keys = joined.filter(del_c).select(F.col(f"{t_alias}.{pk}").alias(pk))
-            n_del = del_keys.count()
         upserts = changed if upd is not None else None
         if insert_rows is not None:
             upserts = (
@@ -503,6 +519,21 @@ class DmlStatements:
                 if upserts is not None
                 else insert_rows
             )
+        removed = del_keys
+        if del_keys is not None and upserts is not None:
+            removed = del_keys.join(upserts.select(pk), on=pk, how="left_anti")
+        self._check_delta(
+            manifest,
+            stmt.target,
+            con.Delta(
+                upserts=upserts,
+                kept=survivors.filter(~F.col("__upd")).drop("__upd"),
+                removed=removed,
+            ),
+        )
+        n_upd = changed.count() if upd is not None else 0
+        n_ins = insert_rows.count() if insert_rows is not None else 0
+        n_del = del_keys.count() if del_keys is not None else 0
         self.catalog.stage_delta(
             manifest, stmt.target, upserts=upserts, deletes=del_keys
         )
@@ -538,25 +569,21 @@ class DmlStatements:
             if where is not None
             else F.lit(True)
         )
-        remaining = df.filter(~F.coalesce(pred, F.lit(False)))
+        removed = df.filter(pred).select(pk)
         # delete-side FK: no surviving row may reference a removed key
         # (engine/kv.rs:157-176)
-        referencing = []
-        for other, ometa in manifest["tables"].items():
-            for c in ometa["columns"]:
-                if c["references"] == stmt.table:
-                    odf = (
-                        remaining
-                        if other == stmt.table
-                        else self.catalog.read_df(manifest, other)
-                    )
-                    referencing.append((other, c["name"], odf))
-        con.check_delete_references(stmt.table, remaining, pk, referencing)
+        self._check_delta(
+            manifest,
+            stmt.table,
+            con.Delta(
+                kept=df.filter(~F.coalesce(pred, F.lit(False))),
+                removed=removed,
+                deleting=True,
+            ),
+        )
         # merge-on-read: write only the tombstoned keys; the matched count
         # comes from the written delta's parquet footers (no extra filter job)
-        delta = self.catalog.stage_delta(
-            manifest, stmt.table, deletes=df.filter(pred).select(pk)
-        )
+        delta = self.catalog.stage_delta(manifest, stmt.table, deletes=removed)
         n_matched = self.catalog.count_rows(delta["deletes"]) if delta else 0
         return Result(status=f"DELETE {n_matched}")
 

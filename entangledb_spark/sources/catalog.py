@@ -103,6 +103,23 @@ def schema_of(columns: list[dict], physical: bool = False) -> T.StructType:
     return T.StructType(fields)
 
 
+def _quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_literal(value: Any, datatype: str) -> str:
+    """An exact SQL literal of the engine type ``datatype``: doubles in
+    round-trip ``repr``, strings as UTF-8 hex (no escaping rules apply)."""
+    if datatype == "BOOLEAN":
+        return "true" if value else "false"
+    if datatype == "INTEGER":
+        return f"CAST({int(value)} AS BIGINT)"
+    if datatype == "FLOAT":
+        return f"CAST('{float(value)!r}' AS DOUBLE)"
+    return f"CAST(X'{str(value).encode('utf-8').hex()}' AS STRING)"
+
+
 def physical_name(c: dict) -> str:
     return c.get("physical", c["name"])
 
@@ -229,7 +246,7 @@ class SnapshotCatalog:
         return next(c["name"] for c in meta["columns"] if c["primary_key"])
 
     def _read_path(
-        self, rels, columns: list[dict], ranks: Optional[dict] = None
+        self, rels, columns: list[dict], ranks: Optional[dict] = None, extra: tuple = ()
     ) -> DataFrame:
         """Read a managed-table file set — one manifest-relative directory
         or a list of them, as ONE scan: scan with the PHYSICAL schema (what
@@ -244,9 +261,9 @@ class SnapshotCatalog:
         directory each row was read from: a CASE over the hidden
         ``_metadata.file_path`` keyed by the directories' unique names
         (``metadataColumn`` reaches it even when the table has a user
-        column called ``_metadata``)."""
-        from pyspark.sql import functions as F
-
+        column called ``_metadata``). ``extra`` appends SQL expressions.
+        The projection is SQL text in one ``selectExpr``: a Python-side
+        Column per name would cost several py4j round-trips each."""
         rels = [rels] if isinstance(rels, str) else list(rels)
         reader = self.spark.read.schema(schema_of(columns, physical=True))
         if len(rels) > 1:
@@ -260,25 +277,27 @@ class SnapshotCatalog:
         # so a positional rename would scramble columns
         out = []
         for c in columns:
-            col = F.col(physical_name(c))
+            col = _quote(physical_name(c))
             if c.get("initial_default") is not None:
-                col = F.coalesce(
-                    col, F.lit(c["initial_default"]).cast(SPARK_TYPES[c["datatype"]])
-                ).alias(c["name"])
+                lit = _sql_literal(c["initial_default"], c["datatype"])
+                out.append(f"coalesce({col}, {lit}) AS {_quote(c['name'])}")
             elif physical_name(c) != c["name"]:
-                col = col.alias(c["name"])
-            out.append(col)
+                out.append(f"{col} AS {_quote(c['name'])}")
+            else:
+                out.append(col)
         if ranks:
             if len(set(ranks.values())) == 1:
-                rank = F.lit(next(iter(ranks.values())))
+                out.append(f"{next(iter(ranks.values()))} AS __rank")
             else:
-                path = df.metadataColumn("_metadata").getField("file_path")
-                rank = None
-                for rel, i in ranks.items():
-                    hit = path.contains(f"/{os.path.basename(rel)}/")
-                    rank = F.when(hit, i) if rank is None else rank.when(hit, i)
-            out.append(rank.alias("__rank"))
-        return df.select(*out)
+                df = df.withColumn(
+                    "__path", df.metadataColumn("_metadata").getField("file_path")
+                )
+                whens = " ".join(
+                    f"WHEN contains(__path, '/{os.path.basename(rel)}/') THEN {i}"
+                    for rel, i in ranks.items()
+                )
+                out.append(f"CASE {whens} END AS __rank")
+        return df.selectExpr(*out, *extra)
 
     def _to_physical(self, df: DataFrame, columns: list[dict]) -> DataFrame:
         """Rename a logical-named frame to stored names before a file
@@ -310,8 +329,6 @@ class SnapshotCatalog:
         and returns the ``__del`` flag (the change feed's net changes)."""
         from functools import reduce
 
-        from pyspark.sql import Window, functions as F
-
         cols_meta = t["columns"]
         if not deltas:
             if base is None:
@@ -325,33 +342,37 @@ class SnapshotCatalog:
 
         parts = []
         if base is not None:
-            parts.append(self._read_path(base, cols_meta).withColumn("__rank", F.lit(0)))
+            parts.append(self._read_path(base, cols_meta, {base: 0}, ("false AS __del",)))
         upserts = ranks("upserts")
         if upserts:
-            parts.append(self._read_path(list(upserts), cols_meta, upserts))
+            parts.append(
+                self._read_path(list(upserts), cols_meta, upserts, ("false AS __del",))
+            )
         if predicate is not None:
             parts = [p.filter(predicate) for p in parts]
-        parts = [p.withColumn("__del", F.lit(False)) for p in parts]
         deletes = ranks("deletes")
         if deletes:
-            tomb = self._read_path(
-                list(deletes), [c for c in cols_meta if c["primary_key"]], deletes
+            nulls = tuple(
+                f"CAST(NULL AS {SPARK_TYPES[c['datatype']].simpleString()}) AS {_quote(c['name'])}"
+                for c in cols_meta
+                if not c["primary_key"]
             )
-            cols = [
-                F.col(pk) if f.name == pk else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema_of(cols_meta).fields
-            ]
-            parts.append(tomb.select(*cols, "__rank", F.lit(True).alias("__del")))
-        merged = reduce(DataFrame.unionByName, parts)
-        w = Window.partitionBy(pk).orderBy(F.col("__rank").desc(), F.col("__del").asc())
-        keep = F.col("__rn") == 1
-        drop = ["__rank", "__rn"]
-        if not keep_tombstones:
-            keep = keep & ~F.col("__del")
-            drop.append("__del")
-        return (
-            merged.withColumn("__rn", F.row_number().over(w)).filter(keep).drop(*drop)
+            parts.append(
+                self._read_path(
+                    list(deletes),
+                    [c for c in cols_meta if c["primary_key"]],
+                    deletes,
+                    nulls + ("true AS __del",),
+                )
+            )
+        merged = reduce(DataFrame.unionByName, parts).selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {_quote(pk)} "
+            "ORDER BY __rank DESC, __del ASC) AS __rn",
         )
+        if keep_tombstones:
+            return merged.filter("__rn = 1").drop("__rank", "__rn")
+        return merged.filter("__rn = 1 AND NOT __del").drop("__rank", "__rn", "__del")
 
     def read_df(self, manifest: dict, name: str) -> DataFrame:
         t = manifest["tables"].get(name)

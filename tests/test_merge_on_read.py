@@ -3,6 +3,8 @@ resolve latest-per-PK; compaction bounds the delta chain."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from entangledb_spark.engine import Engine
@@ -32,6 +34,15 @@ def test_mutations_append_deltas_not_bases(eng):
     assert "upserts" in m1["deltas"][1] and "deletes" in m1["deltas"][2]
     rows = sorted(eng.execute("SELECT id, a FROM t").rows)
     assert rows == [(1, 11), (2, 20)]
+
+
+def test_values_insert_stages_one_file(eng):
+    """A VALUES delta is one parquet file: later reads scan each file as
+    its own split until the next compaction."""
+    for values in ("(4, 40, 400)", "(5, 50, 500), (6, 60, 600)"):
+        eng.execute(f"INSERT INTO t VALUES {values}")
+        up = os.path.join(eng.catalog.base, meta(eng)["deltas"][-1]["upserts"])
+        assert len([f for f in os.listdir(up) if f.endswith(".parquet")]) == 1
 
 
 def test_update_delta_contains_only_changed_rows(eng, spark):
