@@ -211,7 +211,7 @@ def main(argv=None) -> int:
             r = engine.execute(sql)
             if r.dataframe is not None or r.rows is not None:
                 # capped pull: O(MAX_DISPLAY_ROWS) driver memory even for
-                # `SELECT * FROM <huge table>` (toLocalIterator under the hood)
+                # `SELECT * FROM <huge table>` (one LIMIT collect under the hood)
                 rows, truncated = r.fetch(MAX_DISPLAY_ROWS)
                 print(format_table(r.columns or [], rows))
                 if truncated:

@@ -24,7 +24,8 @@ delta against the pre-image the statement read (sources/constraints.py):
 the written rows, and the keys it removes, never the whole table — so a
 1-row write costs a bounded probe, not O(table). No row loops over table
 data in Python anywhere; literal VALUES rows, already Python tuples, are
-checked as such.
+checked as such, then staged as an Arrow LocalRelation (session.local_df):
+writing it is one JVM job with no Python worker.
 """
 
 from __future__ import annotations

@@ -21,7 +21,7 @@ class EngineError(ValueError):
 class Result:
     """Query/statement result. For SELECT the DataFrame is kept LAZY —
     `execute` launches no collection job; callers pull rows through
-    `fetch(max_rows)` (O(max_rows) driver memory via toLocalIterator) or
+    `fetch(max_rows)` (one bounded collect, O(max_rows) driver memory) or
     the `rows` property (full materialization, for small results/tests).
     Other statements carry a status string mirroring the reference's
     ResultSet variants."""
@@ -50,7 +50,11 @@ class Result:
     def fetch(self, max_rows: Optional[int] = None) -> tuple[list[tuple], bool]:
         """First `max_rows` rows plus a truncated flag. Driver memory is
         O(max_rows) regardless of result size — the REPL path for
-        `SELECT * FROM <100 TB table>`."""
+        `SELECT * FROM <100 TB table>`. One `LIMIT max_rows + 1` collect:
+        Catalyst plans a LIMIT over ORDER BY as a top-N
+        (TakeOrderedAndProject) instead of a range-partitioned sort, and
+        rows past the cut are never computed — so a runtime error (ANSI
+        overflow, division by zero) in a row past it does not surface."""
         if self.dataframe is None or self._rows is not None:
             rows = self._rows or []
             if max_rows is not None and len(rows) > max_rows:
@@ -58,12 +62,8 @@ class Result:
             return rows, False
         if max_rows is None:
             return self.rows or [], False
-        out: list[tuple] = []
-        for r in self.dataframe.toLocalIterator():
-            if len(out) >= max_rows:
-                return out, True
-            out.append(tuple(r))
-        return out, False
+        out = [tuple(r) for r in self.dataframe.limit(max_rows + 1).collect()]
+        return out[:max_rows], len(out) > max_rows
 
 
 def _fold_constant(e: ast.Expr) -> Any:

@@ -20,6 +20,7 @@ from entangledb_spark.plans.compiler import (
     compile_statement,
 )
 from entangledb_spark.plans.parser import parse
+from entangledb_spark.session import local_df
 from entangledb_spark.sources import constraints as con
 from entangledb_spark.sources.catalog import (
     SPARK_TYPES,
@@ -80,8 +81,9 @@ class DmlStatements:
         schema = schema_of(
             [dict(c, nullable=True) for c in cols]  # NULL checks run separately
         )
-        # one partition: the delta is one parquet file, not one per slice
-        new_rows = self.spark.createDataFrame(rows, schema).coalesce(1)
+        # an Arrow LocalRelation: writing it runs no Python worker; one
+        # partition, so the delta is one parquet file
+        new_rows = local_df(self.spark, rows, schema).coalesce(1)
         self._check_delta(
             manifest,
             stmt.table,
@@ -531,12 +533,20 @@ class DmlStatements:
                 removed=removed,
             ),
         )
-        n_upd = changed.count() if upd is not None else 0
-        n_ins = insert_rows.count() if insert_rows is not None else 0
-        n_del = del_keys.count() if del_keys is not None else 0
-        self.catalog.stage_delta(
+        delta = self.catalog.stage_delta(
             manifest, stmt.target, upserts=upserts, deletes=del_keys
-        )
+        ) or {}
+        # counts come from the written files' footers; only a MERGE that
+        # both updates and inserts runs one job, to split its upserts
+        written = self.catalog.count_rows(delta["upserts"]) if "upserts" in delta else 0
+        n_del = self.catalog.count_rows(delta["deletes"]) if "deletes" in delta else 0
+        if upd is None:
+            n_ins = written
+        elif ins is None:
+            n_ins = 0
+        else:
+            n_ins = insert_rows.count()
+        n_upd = written - n_ins
         return Result(
             status=f"MERGE {n_upd} updated, {n_ins} inserted, {n_del} deleted"
         )
@@ -670,15 +680,26 @@ def _eval_constant(e: ast.Expr) -> Any:
             "MUL": lambda a, b: a * b,
         }
         if name in ops:
-            return ops[name](*vals)
+            return _checked_int(ops[name](*vals))
         if name == "DIV":
             if vals[1] == 0:
                 raise EngineError("can't divide by zero")
             if isinstance(vals[0], int) and isinstance(vals[1], int):
                 q = abs(vals[0]) // abs(vals[1])
-                return q if (vals[0] >= 0) == (vals[1] >= 0) else -q
+                return _checked_int(q if (vals[0] >= 0) == (vals[1] >= 0) else -q)
             return vals[0] / vals[1]
     raise EngineError("INSERT values must be constant expressions")
+
+
+I64_MIN, I64_MAX = -(2**63), 2**63 - 1
+
+
+def _checked_int(v: Any) -> Any:
+    """``v``, or an error for an integer outside i64 — the reference's
+    checked arithmetic, and what ANSI Spark raises for the same SELECT."""
+    if isinstance(v, int) and not isinstance(v, bool) and not I64_MIN <= v <= I64_MAX:
+        raise EngineError(f"integer overflow: {v} is outside the 64-bit range")
+    return v
 
 
 def _coerce_row(named: dict, cols: list[dict], table: str) -> tuple:
@@ -695,10 +716,14 @@ def _coerce_row(named: dict, cols: list[dict], table: str) -> tuple:
         elif dt == "INTEGER":
             if isinstance(v, bool) or not isinstance(v, int):
                 raise EngineError(f"invalid value {v!r} for integer column {c['name']}")
+            _checked_int(v)
         elif dt == "FLOAT":
             if isinstance(v, bool) or not isinstance(v, (int, float)):
                 raise EngineError(f"invalid value {v!r} for float column {c['name']}")
-            v = float(v)
+            try:
+                v = float(v)
+            except OverflowError:  # an integer literal beyond every double
+                raise EngineError(f"integer overflow: {v} is outside the float range")
         elif dt == "STRING":
             if not isinstance(v, str):
                 raise EngineError(f"invalid value {v!r} for string column {c['name']}")

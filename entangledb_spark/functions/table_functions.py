@@ -45,6 +45,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from entangledb_spark.session import local_df
+
 
 @dataclass(frozen=True)
 class TvfSpec:
@@ -112,9 +114,7 @@ def _ann_topk(spark: SparkSession, index_dir, vec, k=5) -> DataFrame:
             kind = json.load(f).get("kind")
     except OSError:
         raise ValueError(f"ann_topk: no index meta at {meta_path}")
-    probe = spark.createDataFrame(
-        [(-1, floats)], "vec_id long, embedding array<float>"
-    )
+    probe = local_df(spark, [(-1, floats)], "vec_id long, embedding array<float>")
     if kind == "lsh":
         out = ann_index.probe_lsh_index(
             spark, index_dir, probe, k=k, exclude_self=False
@@ -393,8 +393,8 @@ def _relations(spark: SparkSession, read) -> DataFrame:
         raise ValueError(
             "relations(): no catalog behind this session's reader"
         )
-    return spark.createDataFrame(
-        rels(), "name string, kind string, n_columns long, columns string"
+    return local_df(
+        spark, rels(), "name string, kind string, n_columns long, columns string"
     )
 
 

@@ -76,6 +76,7 @@ from entangledb_spark.operators.similarity import (
     ivf_centroids,
     lsh_bucket_codes,
 )
+from entangledb_spark.session import local_df
 from entangledb_spark.sources.parquet_io import _read_cached_schema
 
 # Ceiling on the per-probe LITERAL route of probe_ivfpq_index: each probe
@@ -746,7 +747,7 @@ def probe_ivfpq_index(
                 "query_id long, neighbor_id long, adc_dist double, "
                 "exact_dist double, rk long"
             )
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     cells = sorted({c for _, pcells in by_pid.values() for c in pcells})
     # IN as ONE parsed SQL string: Column.isin() lifts every element
     # through its own py4j literal (~4 round-trips each — 136 for 32
@@ -915,7 +916,7 @@ def probe_ivfpq_bulk(
                 "query_id long, neighbor_id long, adc_dist double, "
                 "exact_dist double, rk long"
             )
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     if by_residual:
         # the LUT input is the residual vs the probed cell's RAW centroid
         # — per (probe, cell) row, matching the literal route's

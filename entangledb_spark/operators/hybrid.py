@@ -29,6 +29,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from entangledb_spark.session import local_df
+
 # SIGIR'09 damping constant: large enough that a #1 hit in one list can't
 # drown broad agreement at ranks 5-10 across lists.
 RRF_K = 60
@@ -176,8 +178,8 @@ def hybrid_topk(
     bm = _ranked_bm25(
         bm25_topk_indexed(spark, text_index_dir, tuple(terms), k=candidates)
     )
-    probe = spark.createDataFrame(
-        [(-1, [float(x) for x in vector])], "vec_id long, embedding array<float>"
+    probe = local_df(
+        spark, [(-1, [float(x) for x in vector])], "vec_id long, embedding array<float>"
     )
     ann_kw.setdefault("route", "literal")  # one probe: skip the auto take
     ann = probe_ann_index(

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from entangledb_spark.operators.text import normalize_text
+from entangledb_spark.session import local_df
 
 N_GRAM = 3
 TOP_GRAMS = 64  # kept grams per language
@@ -244,7 +245,8 @@ def _langid_scores_join_route(
     tests/test_langid.py::test_classify_langs_join_route_matches_literal);
     NOT bit-identical, so hash-gated queries (q92) must stay literal."""
     spark = docs.sparkSession
-    model_df = spark.createDataFrame(
+    model_df = local_df(
+        spark,
         [(g, [float(x) for x in lps]) for g, lps in sorted(model["grams"].items())],
         "gram string, _lps array<double>",
     )

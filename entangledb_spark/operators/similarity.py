@@ -19,6 +19,7 @@ from entangledb_spark.functions.exprmemo import expr_template
 from entangledb_spark.functions.numeric import r4, r6
 from entangledb_spark.operators.text import knuth_key_sql as _knuth_key_sql
 from entangledb_spark.registry import query, table
+from entangledb_spark.session import local_df
 
 N_HYPERPLANES = 4  # sign-LSH code width per table → 16 buckets
 N_LSH_TABLES = 6  # independent hash tables; candidates = union over tables
@@ -1760,7 +1761,8 @@ def semantic_dedup_pairs(
     else:
         # above the literal-folding ceiling: tiny broadcast join on cell
         # (centroids were already a bounded collect) + built-in cosine
-        cent_df = emb.sparkSession.createDataFrame(
+        cent_df = local_df(
+            emb.sparkSession,
             [(int(r.cell), [float(x) for x in r.centroid]) for r in cents],
             "cell long, _centroid array<double>",
         )

@@ -85,6 +85,7 @@ from entangledb_spark.operators.index_commit import (
     staging_dir,
     write_meta,
 )
+from entangledb_spark.session import local_df
 
 N_TOKEN_BUCKETS = 64
 
@@ -284,8 +285,8 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> None:
         os.path.join(index_dir, "lexicon")
     )
     row = posts.groupBy().agg(F.sum("tf").alias("sum_dl")).collect()[0]
-    spark.createDataFrame(
-        [(n_docs, int(row.sum_dl or 0))], "n_docs long, sum_dl long"
+    local_df(
+        spark, [(n_docs, int(row.sum_dl or 0))], "n_docs long, sum_dl long"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "stats"))
 
 

@@ -19,9 +19,9 @@ Sessions: every connection gets its OWN Engine (its own transaction
 state) over the SHARED SparkSession and snapshot catalog — concurrent
 writers are serialized by the catalog's optimistic concurrency check, the
 same protocol in-process sessions use. Row transfer is capped per request
-(`max_rows`, default 1000) and pulled through the lazy Result
-(toLocalIterator), so a `SELECT * FROM <huge table>` costs the server
-O(max_rows) memory, never a full collect.
+(`max_rows`, default 1000) and pulled through the lazy Result (one
+`LIMIT max_rows + 1` collect), so a `SELECT * FROM <huge table>` costs
+the server O(max_rows) memory, never a full collect.
 """
 
 from __future__ import annotations

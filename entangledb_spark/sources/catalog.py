@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from entangledb_spark.plans import ast
+from entangledb_spark.session import local_df
 
 SPARK_TYPES = {
     "BOOLEAN": T.BooleanType(),
@@ -332,7 +333,7 @@ class SnapshotCatalog:
         cols_meta = t["columns"]
         if not deltas:
             if base is None:
-                return self.spark.createDataFrame([], schema_of(cols_meta))
+                return local_df(self.spark, [], schema_of(cols_meta))
             df = self._read_path(base, cols_meta)
             return df if predicate is None else df.filter(predicate)
         pk = self._pk_of(t)
@@ -779,7 +780,7 @@ class SnapshotCatalog:
         new_deltas = t_new.get("deltas", [])
 
         def empty() -> DataFrame:
-            return self.spark.createDataFrame([], schema).withColumn(
+            return local_df(self.spark, [], schema).withColumn(
                 "_change_type", F.lit("").cast("string")
             )
 

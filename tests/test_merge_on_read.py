@@ -271,6 +271,13 @@ def test_resolved_view_plan_has_at_most_three_scans(spark, tmp_path):
     eng.execute(f"INSERT INTO src VALUES {_values([(i, i) for i in range(1, 21)])}")
     eng.execute("CREATE TABLE t AS SELECT id, a FROM src")
     cat = eng.catalog
+    # a table with no base and no deltas: an empty local relation, no scan
+    eng.execute("CREATE TABLE e (id INTEGER PRIMARY KEY, a STRING)")
+    v_e = cat.current_version()
+    for view in (cat.read_df(cat.manifest(), "e"), cat.changes_df("e", v_e, v_e)):
+        scans, plan = _file_scans(view)
+        assert scans == 0 and "LocalRelation" in plan, plan
+        assert "LogicalRDD" not in plan, plan
     v0 = cat.current_version()
     feed_scans = set()
     for n in range(1, cat.COMPACT_AFTER):
