@@ -503,8 +503,8 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
             df = self.catalog.read_df(manifest, name)
             # stats-informed broadcast hint (see analyze()): Spark's own
             # size estimate can't see through the merge-on-read resolve
-            # plan (window over base ∪ deltas), so a small dim with deltas
-            # may miss auto-broadcast. ANALYZEd row counts restore the
+            # plan (base ∪ upserts anti-joined against the chain's keys),
+            # so a small dim with deltas may miss auto-broadcast. ANALYZEd row counts restore the
             # metastore-stats-driven first plan; AQE still re-plans big
             # misestimates at runtime.
             meta = manifest["tables"].get(name) or {}

@@ -303,6 +303,14 @@ def _compile_window(e: "ast.WindowFunc", resolve: Resolver, field_type: TypeOf) 
     raise CompileError(f"unknown window function: {name}")
 
 
+def _checked_literal(v):
+    """``v``, or a CompileError for an integer literal outside i64 (the
+    JVM would reject it while building the literal)."""
+    if type(v) is int and not -(2**63) <= v < 2**63:
+        raise CompileError(f"integer overflow: {v} is outside the 64-bit range")
+    return v
+
+
 def compile_expr(e: ast.Expr, resolve: Resolver, field_type: TypeOf) -> Column:
     """Lower an AST expression to a Column. Aggregate FuncCalls must already
     have been rewritten to Fields by the SELECT compiler — reaching one here
@@ -310,7 +318,7 @@ def compile_expr(e: ast.Expr, resolve: Resolver, field_type: TypeOf) -> Column:
     if isinstance(e, ast.Literal):
         if e.value is None:
             return F.lit(None)
-        return F.lit(e.value)
+        return F.lit(_checked_literal(e.value))
     if isinstance(e, ast.Field):
         return resolve(e)
     if isinstance(e, ast.WindowFunc):
@@ -401,6 +409,10 @@ def compile_expr(e: ast.Expr, resolve: Resolver, field_type: TypeOf) -> Column:
             return p.cast("long")  # int ^ nonneg-int stays integral
         return p
     if n == "NEG":
+        a = args[0]
+        if isinstance(a, ast.Literal) and type(a.value) is int:
+            # folded: the parser reads -9223372036854775808 as NEG of 2^63
+            return F.lit(_checked_literal(-a.value))
         return -c(0)
     if n == "POS":
         # unary + asserts numeric, identity (expression.rs:136-141)

@@ -106,9 +106,10 @@ def _guard_expr_memo(spark: SparkSession) -> None:
     _LAST_GATEWAY[0] = weakref.ref(gw)
 
 
-def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """``rows`` (tuples in field order) as an Arrow-backed ``LocalRelation``
-    of ``schema`` (a StructType or a DDL string) — the one way the engine
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples in field order, or a ``pyarrow.Table`` with the
+    fields in order) as an Arrow-backed ``LocalRelation`` of ``schema``
+    (a StructType or a DDL string) — the one way the engine
     turns driver-local values into a DataFrame. A frame built from a
     Python list is a pickled RDD: collecting or writing it runs a
     Python-worker job, while a LocalRelation is scanned on the driver (no
@@ -121,10 +122,13 @@ def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
     arrow = to_arrow_schema(schema)
-    table = pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
-        schema=arrow,
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow.names).cast(arrow)
+    else:
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+            schema=arrow,
+        )
     return spark.createDataFrame(table, schema)
 
 

@@ -24,9 +24,11 @@ A table entry names a base file set (``data``; CREATE TABLE AS writes it,
 a table born empty has none until its first compaction) and a chain of up
 to COMPACT_AFTER delta entries, each an upsert and/or a PK-tombstone file
 set. DML writes only the changed rows as a new delta; a read resolves the
-chain in at most three scans — base, all upserts, all tombstones — and one
-window on the PK (``_resolve``). Compaction folds the chain into a new
-base, so read amplification stays bounded.
+chain in ONE scan of the base and all upserts, anti-joined against the
+chain's primary keys, which the driver reads from the delta files
+(``_resolve``): no shuffle. Compaction folds the chain into a new base
+after COMPACT_AFTER deltas or COMPACT_KEYS delta rows, so read
+amplification and the keys the driver holds stay bounded.
 """
 
 from __future__ import annotations
@@ -233,15 +235,24 @@ class SnapshotCatalog:
     # entries, each holding `upserts` (full rows) and/or `deletes` (PK
     # tombstones) in its own directory. Mutations write O(changed rows),
     # not O(table) — the property that makes DML viable on a 100 TB table.
-    # `_resolve` reads a chain in at most three scans — the base, ONE scan
-    # of every upsert directory and ONE of every tombstone directory, each
-    # row ranked by the directory its file sits in — then keeps the latest
-    # row per PK with one window pass (single shuffle on the PK). After
-    # COMPACT_AFTER deltas the view is rewritten as a new base, so read
-    # amplification stays bounded. This is the Delta-Lake / Iceberg
-    # merge-on-read shape in miniature.
+    # `_resolve` reads a chain in ONE scan of the base and every upsert
+    # directory, each row ranked by the directory its file sits in, and
+    # drops every row a later delta touches by a broadcast anti-join
+    # against the chain's keys — the PK column of each delta file, read on
+    # the driver (deltas hold O(changed rows)). No shuffle, no window.
+    # After COMPACT_AFTER deltas, or COMPACT_KEYS delta rows, the view is
+    # rewritten as a new base, so read amplification and the keys a read
+    # holds stay bounded. This is the Delta-Lake / Iceberg merge-on-read
+    # shape in miniature.
 
     COMPACT_AFTER = 8
+    # Delta rows (hence keys) a chain may hold before it compacts. A read
+    # broadcasts the keys from the driver: 250k keys are 5 MB by Spark's
+    # size estimate for an INTEGER key and 8 MB for a STRING one (20 and
+    # 32 B a row), under the default 10 MB auto-broadcast threshold, so
+    # the anti-join never falls back to a shuffle. In Arrow they take
+    # 3 MB; building their LocalRelation took 0.3 s on a 4-core VM.
+    COMPACT_KEYS = 250_000
 
     def _pk_of(self, meta: dict) -> str:
         return next(c["name"] for c in meta["columns"] if c["primary_key"])
@@ -313,6 +324,49 @@ class SnapshotCatalog:
             ]
         )
 
+    def _chain_keys(self, t: dict, deltas: list) -> DataFrame:
+        """The keys of the chain ``deltas`` of table entry ``t``: a
+        LocalRelation ``(__kpk, __krank)`` with each PK the chain writes
+        and the rank of its latest write — ``2i`` for an upsert and
+        ``2i-1`` for a tombstone of delta ``i``. Read on the driver with
+        pyarrow from the PK column alone, no Spark job: deltas hold
+        O(changed rows) and COMPACT_KEYS bounds them."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        pkc = next(c for c in t["columns"] if c["primary_key"])
+        key = schema_of([dict(pkc, name=physical_name(pkc))])
+        field = to_arrow_schema(key)
+        # a partition_by PK sits in the upsert directories' names
+        hive = (
+            ds.partitioning(field, flavor="hive")
+            if pkc["name"] in (t.get("partition_by") or [])
+            else None
+        )
+        parts = []
+        for i, d in enumerate(deltas, start=1):
+            for kind, rank in (("deletes", 2 * i - 1), ("upserts", 2 * i)):
+                if d.get(kind):
+                    col = (
+                        ds.dataset(
+                            os.path.join(self.base, d[kind]),
+                            schema=field,
+                            format="parquet",
+                            partitioning=hive if kind == "upserts" else None,
+                        )
+                        .to_table()
+                        .column(0)
+                    )
+                    rank_col = pa.array(np.full(len(col), rank, dtype=np.int32))
+                    parts.append(pa.table({"k": col, "r": rank_col}))
+        latest = pa.concat_tables(parts).group_by("k").aggregate([("r", "max")])
+        schema = T.StructType(
+            [T.StructField("__kpk", key[0].dataType), T.StructField("__krank", T.IntegerType())]
+        )
+        return local_df(self.spark, latest.select(["k", "r_max"]), schema)
+
     def _resolve(
         self,
         t: dict,
@@ -320,15 +374,25 @@ class SnapshotCatalog:
         base: Optional[str],
         predicate=None,
         keep_tombstones: bool = False,
+        keys: Optional[DataFrame] = None,
     ) -> DataFrame:
-        """The merge-on-read view of table entry ``t``: ``base`` (rank 0)
-        under ``deltas`` (rank 1..n), in at most three scans. The latest
-        rank wins per PK; at equal rank an upsert beats a tombstone
-        (UPDATE pk=pk+1 writes both in one delta). ``predicate`` filters
-        the base and upsert scans below the window (see read_df_pruned).
-        ``keep_tombstones`` keeps a PK whose latest version is a tombstone
-        and returns the ``__del`` flag (the change feed's net changes)."""
-        from functools import reduce
+        """The merge-on-read view of table entry ``t``: ``base`` under
+        the chain ``deltas``. ``rows`` is ONE scan of the base (rank 0) and
+        every upsert directory (rank ``2i`` for delta ``i``); a row
+        survives unless a later write touches its PK:
+
+            rows LEFT ANTI JOIN keys ON pk = __kpk AND __krank > __rank
+
+        with ``keys`` from ``_chain_keys`` (a broadcast, no shuffle). This
+        is exact because the base and each delta's upserts are unique on
+        the PK (check_delta and the streaming writers keep them so). At
+        equal delta an upsert (``2i``) outranks a tombstone (``2i-1``), so
+        UPDATE pk=pk+1, which writes both in one delta, resolves.
+        ``predicate`` filters ``rows`` (see read_df_pruned).
+        ``keep_tombstones`` adds, flagged by ``__del``, a row for each PK
+        whose latest write is a tombstone (the change feed's net changes).
+        ``keys`` passes the chain's keys when the caller already has them."""
+        from pyspark.sql import functions as F
 
         cols_meta = t["columns"]
         if not deltas:
@@ -336,44 +400,38 @@ class SnapshotCatalog:
                 return local_df(self.spark, [], schema_of(cols_meta))
             df = self._read_path(base, cols_meta)
             return df if predicate is None else df.filter(predicate)
-        pk = self._pk_of(t)
-
-        def ranks(kind: str) -> dict:
-            return {d[kind]: i for i, d in enumerate(deltas, start=1) if d.get(kind)}
-
-        parts = []
-        if base is not None:
-            parts.append(self._read_path(base, cols_meta, {base: 0}, ("false AS __del",)))
-        upserts = ranks("upserts")
-        if upserts:
-            parts.append(
-                self._read_path(list(upserts), cols_meta, upserts, ("false AS __del",))
+        pk = _quote(self._pk_of(t))
+        ranks = {} if base is None else {base: 0}
+        ranks.update(
+            {d["upserts"]: 2 * i for i, d in enumerate(deltas, start=1) if d.get("upserts")}
+        )
+        flag = ("false AS __del",) if keep_tombstones else ()
+        if ranks:
+            rows = self._read_path(list(ranks), cols_meta, ranks, flag)
+        else:
+            rows = local_df(self.spark, [], schema_of(cols_meta)).selectExpr(
+                "*", "0 AS __rank", *flag
             )
         if predicate is not None:
-            parts = [p.filter(predicate) for p in parts]
-        deletes = ranks("deletes")
-        if deletes:
-            nulls = tuple(
-                f"CAST(NULL AS {SPARK_TYPES[c['datatype']].simpleString()}) AS {_quote(c['name'])}"
-                for c in cols_meta
-                if not c["primary_key"]
-            )
-            parts.append(
-                self._read_path(
-                    list(deletes),
-                    [c for c in cols_meta if c["primary_key"]],
-                    deletes,
-                    nulls + ("true AS __del",),
-                )
-            )
-        merged = reduce(DataFrame.unionByName, parts).selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY {_quote(pk)} "
-            "ORDER BY __rank DESC, __del ASC) AS __rn",
-        )
+            rows = rows.filter(predicate)
+        if keys is None:
+            keys = self._chain_keys(t, deltas)
         if keep_tombstones:
-            return merged.filter("__rn = 1").drop("__rank", "__rn")
-        return merged.filter("__rn = 1 AND NOT __del").drop("__rank", "__rn", "__del")
+            tombstones = keys.filter("__krank % 2 = 1").selectExpr(
+                *(
+                    f"__kpk AS {pk}"
+                    if c["primary_key"]
+                    else f"CAST(NULL AS {SPARK_TYPES[c['datatype']].simpleString()})"
+                    f" AS {_quote(c['name'])}"
+                    for c in cols_meta
+                ),
+                "__krank AS __rank",
+                "true AS __del",
+            )
+            rows = rows.unionByName(tombstones)
+        return rows.join(
+            keys, F.expr(f"{pk} = __kpk AND __krank > __rank"), "left_anti"
+        ).drop("__rank")
 
     def read_df(self, manifest: dict, name: str) -> DataFrame:
         t = manifest["tables"].get(name)
@@ -389,25 +447,22 @@ class SnapshotCatalog:
 
     def read_df_pruned(self, manifest: dict, name: str, predicate) -> DataFrame:
         """Merge-on-read view of ``name`` with ``predicate`` (a Column over
-        the table's partition column(s)) applied to the base and upsert
-        scans BEFORE the pk-version window, so partition pruning happens
-        at the parquet source instead of being blocked above the window
-        (Catalyst won't push a non-window-key filter through it).
+        the table's partition column(s)) applied to the scan of the base
+        and upserts, so partition pruning happens at the parquet source.
 
         Sound only when the predicate's columns are functionally
         determined by the pk and every writer maintains them consistently
         (all versions of a pk live in the same partition) — exactly the
         contract of a declared ``partition_by`` column like the
-        fp-prefix bucket in streaming/corpus_dedup.py. The tombstone scan
-        (pk-only) is left unfiltered: a surviving tombstone for an
-        unprobed pk deletes a row the caller wasn't asking about, which
-        the merge semantics already handle."""
+        fp-prefix bucket in streaming/corpus_dedup.py. The chain's keys
+        are left unfiltered: a key of an unprobed pk removes nothing the
+        filtered scan still holds."""
         t = manifest["tables"].get(name)
         if t is None:
             raise CatalogError(f"table {name} does not exist")
         if t.get("external"):
             # ATTACHed external parquet has no merge-on-read parts to
-            # prune below a window; the plain scan pushes the predicate
+            # prune; the plain scan pushes the predicate
             # down as an ordinary source filter, which is all "pruned"
             # can mean for a table we don't partition ourselves.
             from entangledb_spark.sources.parquet_io import read_parquet_any
@@ -469,9 +524,24 @@ class SnapshotCatalog:
         if not delta:
             return None
         meta.setdefault("deltas", []).append(delta)
-        if len(meta["deltas"]) >= self.COMPACT_AFTER:
+        if self.chain_full(meta):
             self.compact(manifest, name)
         return delta
+
+    def chain_full(self, meta: dict) -> bool:
+        """Whether the delta chain of table entry ``meta`` must fold into
+        a new base: it holds COMPACT_AFTER deltas, or more than
+        COMPACT_KEYS delta rows (counted from the parquet footers) — every
+        read of the table holds the chain's keys on the driver."""
+        deltas = meta.get("deltas") or []
+        if len(deltas) >= self.COMPACT_AFTER:
+            return True
+        rows = 0
+        for d in deltas:
+            for kind in ("upserts", "deletes"):
+                if d.get(kind):
+                    rows += self.count_rows(d[kind])
+        return rows > self.COMPACT_KEYS
 
     def count_rows(self, rel: str) -> int:
         """Row count of a written snapshot from parquet footer statistics —
@@ -500,7 +570,13 @@ class SnapshotCatalog:
         if part_by:
             part_by = [physical_name(by_name.get(p, {"name": p})) for p in part_by]
         if view is None:
-            view = self.read_df(manifest, name)
+            # one shuffle on the PK: the resolve keeps the input files'
+            # splits, so without it the new base would hold a file per
+            # input file, and the file count would grow with every
+            # compaction; AQE coalesces the shuffle to a few files. Each
+            # file is sorted on the PK, so footer min/max prune PK probes.
+            pk = self._pk_of(meta)
+            view = self.read_df(manifest, name).repartition(pk).sortWithinPartitions(pk)
         meta["data"] = self.write_snapshot(
             name, self._to_physical(view, cols_meta), part_by
         )
@@ -596,9 +672,9 @@ class SnapshotCatalog:
         """OPTIMIZE t [ZORDER BY (...)] WHERE <partition equalities>
         (round 10; ZORDER scope round 11): rewrite the MATCHING partition
         directories from the merged view (pending deltas for those rows
-        fold in — re-applying them on read stays correct: a delta row
-        outranks both base copies it may shadow, so the window-by-PK
-        merge is unaffected) and HARD-LINK every other partition
+        fold in — re-applying them on read stays correct: every delta
+        still outranks the base rows it shadows, and a delta's row
+        replaces its folded base copy) and HARD-LINK every other partition
         directory into the new base unchanged. The delta chain is
         preserved. Cost scales with the matched partitions, never the
         table — the scoped-OPTIMIZE contract at 100 TB (re-clustering a
@@ -741,12 +817,12 @@ class SnapshotCatalog:
 
         Fast path: when to_v's delta chain extends from_v's on the same
         base (the common no-compaction case), only the NEW delta files are
-        read — O(changed rows) — resolved to one net row per PK, then one
-        join against the from_v snapshot's PK column classifies
-        insert-vs-update and fills delete pre-images. The changed set is
-        small relative to the table, so this join broadcasts or shuffles
-        only PKs. When compaction rewrote the base in between, falls back
-        to a full snapshot diff: one null-safe full-outer join on PK.
+        read — O(changed rows) — resolved to one net row per PK, then ONE
+        left join to the from_v view, pruned to the tail's keys, classifies
+        insert, update and delete and fills delete pre-images: two file
+        scans and no window at any tail length. When compaction rewrote
+        the base in between, falls back to a full snapshot diff: one
+        null-safe full-outer join on PK.
         Deletes carry the pre-image row; inserts/updates the post-image.
         """
         from pyspark.sql import functions as F
@@ -788,33 +864,32 @@ class SnapshotCatalog:
             tail = new_deltas[len(old_deltas):]
             if not tail:
                 return empty()
-            # resolve the tail to one net (row, __del) per PK — the same
-            # chain resolve as read_df, over O(changed rows) only
-            net = self._resolve(t_new, tail, None, keep_tombstones=True)
-            old_view = self.read_df(man_old, name)
-            existed = old_view.select(F.col(pk).alias("__opk")).withColumn(
-                "__existed", F.lit(True)
+            # the tail's net (row, __del) per PK — the same resolve as
+            # read_df, over O(changed rows) — joined once to the from_v
+            # rows of the keys it touches
+            keys = self._chain_keys(t_new, tail)
+            net = self._resolve(t_new, tail, None, keep_tombstones=True, keys=keys)
+            old = (
+                self.read_df(man_old, name)
+                .join(keys, F.expr(f"{_quote(pk)} = __kpk"), "left_semi")
+                .toDF(*[f"__o{i}" for i in range(len(cols))])
             )
-            marked = net.join(existed, net[pk] == existed["__opk"], "left").drop("__opk")
-            ups = (
-                marked.filter(~F.col("__del"))
-                .withColumn(
-                    "_change_type",
-                    F.when(F.col("__existed").isNotNull(), "update").otherwise("insert"),
-                )
-                .select(*cols, "_change_type")
-            )
+            opk = f"__o{cols.index(pk)}"
             # tombstones of rows that never existed at from_v are no-ops;
             # real deletes carry the pre-image row from the old snapshot
-            del_pks = marked.filter(F.col("__del") & F.col("__existed").isNotNull()).select(
-                F.col(pk).alias("__dpk")
+            return (
+                net.join(old, F.expr(f"{_quote(pk)} = {opk}"), "left")
+                .selectExpr(
+                    *(
+                        f"CASE WHEN __del THEN __o{i} ELSE {_quote(c)} END AS {_quote(c)}"
+                        for i, c in enumerate(cols)
+                    ),
+                    f"CASE WHEN NOT __del THEN CASE WHEN {opk} IS NULL THEN 'insert'"
+                    f" ELSE 'update' END WHEN {opk} IS NOT NULL THEN 'delete' END"
+                    " AS _change_type",
+                )
+                .filter("_change_type IS NOT NULL")
             )
-            dels = (
-                old_view.join(del_pks, old_view[pk] == del_pks["__dpk"], "left_semi")
-                .withColumn("_change_type", F.lit("delete"))
-                .select(*cols, "_change_type")
-            )
-            return ups.unionByName(dels)
 
         # compaction/rewrite inside the range → null-safe snapshot diff
         o = self.read_df(man_old, name).alias("o")

@@ -16,8 +16,8 @@ constraint, so a violation needs a written or a removed row:
   ``INSERT … VALUES`` rows are checked in Python, with no Spark job.
 - PRIMARY KEY / UNIQUE: duplicates inside the upserts, then upsert
   values that a kept row already holds — probed with ``col IN (…)`` when
-  the values are literals (Catalyst pushes a PK filter below the
-  merge-on-read window into row-group pruning), else a semi-join.
+  the values are literals (Catalyst pushes a PK filter through the
+  merge-on-read anti-join into row-group pruning), else a semi-join.
 - FOREIGN KEY, child side: the upserts' distinct values anti-joined
   against the parent's keys (for a self-reference the parent is
   ``kept ∪ upserts``; NaN skips the check, schema.rs:248).
@@ -220,7 +220,8 @@ def _first_repeat(values: list) -> Any:
 
 def _check_literal_references(name: str, c: dict, values: list, target_df_and_pk) -> None:
     """check_foreign_keys for literal values: one probe of the parent with
-    ``pk IN (…)``, which Catalyst pushes below the merge-on-read window."""
+    ``pk IN (…)``, which Catalyst pushes through the merge-on-read
+    anti-join."""
     if c["datatype"] == "FLOAT":
         values = [v for v in values if not math.isnan(v)]
     if not values:

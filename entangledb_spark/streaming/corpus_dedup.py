@@ -60,7 +60,11 @@ from pyspark.sql import Column
 
 from entangledb_spark.operators.text import fingerprint
 from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog
-from entangledb_spark.streaming.ingest import MAX_CAS_ATTEMPTS, maybe_compact
+from entangledb_spark.streaming.ingest import (
+    MAX_CAS_ATTEMPTS,
+    check_batch_keys,
+    maybe_compact,
+)
 
 FP_N_BUCKETS = 256
 
@@ -131,6 +135,11 @@ def commit_dedup_batch(
                 f"dedup ingest table {docs_table} has no non-pk STRING column "
                 f"to dedup on — pass text_col explicitly"
             )
+    # a PK-unique, non-null batch keeps both deltas unique on their PKs:
+    # the docs delta is a subset of the batch rows, and the fp delta has
+    # one row per written doc, with the fp the within-batch dedup made
+    # unique (NULL text maps to a sentinel fp)
+    check_batch_keys(batch_df, pk)
     deduped = _dedup_within_batch(batch_df.select(*doc_cols), pk, text_col)
 
     # The write lives INSIDE the retry loop (unlike append-only ingest):

@@ -34,7 +34,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 
-from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog
+from entangledb_spark.sources.catalog import CatalogError, ConflictError, SnapshotCatalog
 
 # CAS publish attempts per micro-batch before failing the stream loudly.
 # 50 attempts ≈ tens of seconds of capped-backoff contention — far beyond
@@ -62,10 +62,12 @@ def commit_stream_batch(
     meta = m["tables"].get(table_name)
     if meta is None:
         raise ConflictError(f"ingest target table {table_name} does not exist")
-    # align to the table schema (order + names); analyzer errors surface
-    # here, before any files are written
+    # align to the table schema (order + names); analyzer and key errors
+    # surface here, before any files are written
     cols = [c["name"] for c in meta["columns"]]
-    rel = catalog.write_snapshot(table_name, batch_df.select(*cols))
+    batch_df = batch_df.select(*cols)
+    check_batch_keys(batch_df, catalog._pk_of(meta))
+    rel = catalog.write_snapshot(table_name, batch_df)
     delta = {"upserts": rel}
     # Bounded CAS retry: each attempt is cheap (manifest re-read + one
     # publish), but an UNBOUNDED loop under sustained writer contention
@@ -100,9 +102,29 @@ def commit_stream_batch(
         )
     # Compaction runs AFTER the batch is durably published (see
     # maybe_compact for why it must not sit inside the retry loop).
-    if len(meta["deltas"]) >= catalog.COMPACT_AFTER:
-        maybe_compact(catalog, table_name)
+    maybe_compact(catalog, table_name)
     return v
+
+
+def check_batch_keys(batch_df: DataFrame, pk: str) -> None:
+    """Reject a micro-batch holding a NULL or a duplicate primary key
+    with a CatalogError. A delta's upserts must be unique and non-null on
+    the PK — the merge-on-read resolve keeps every row of a delta no later
+    write touches, so two rows with one PK would both be read back. One
+    aggregate over the batch; run it before writing any file."""
+    from pyspark.sql import functions as F
+
+    bad = (
+        batch_df.groupBy(pk)
+        .count()
+        .filter(F.col(pk).isNull() | (F.col("count") > 1))
+        .take(1)
+    )
+    if bad:
+        key, n = bad[0]
+        if key is None:
+            raise CatalogError(f"micro-batch has a NULL primary key {pk}")
+        raise CatalogError(f"micro-batch has {n} rows with primary key {pk} = {key!r}")
 
 
 def maybe_compact(catalog: SnapshotCatalog, table_name: str) -> None:
@@ -116,7 +138,7 @@ def maybe_compact(catalog: SnapshotCatalog, table_name: str) -> None:
     v1 = catalog.current_version()
     m1 = catalog.manifest(v1)
     meta1 = m1["tables"].get(table_name)
-    if meta1 is not None and len(meta1.get("deltas", [])) >= catalog.COMPACT_AFTER:
+    if meta1 is not None and catalog.chain_full(meta1):
         catalog.compact(m1, table_name)
         try:
             catalog.publish(m1, expected_version=v1)

@@ -106,6 +106,7 @@ from entangledb_spark.operators._minhash_params import (
 from entangledb_spark.operators.dedup import minhash_signature, word_tokens
 from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog
 from entangledb_spark.streaming.corpus_dedup import retry_cas_commit
+from entangledb_spark.streaming.ingest import check_batch_keys
 
 BAND_N_BUCKETS = 256
 
@@ -230,6 +231,11 @@ def commit_near_dedup_batch(
         .agg(F.min(F.struct(*doc_cols)).alias("__row"))
         .select(*[F.col(f"__row.{c}").alias(c) for c in doc_cols])
     )
+    # the group-by makes the batch PK-unique; a NULL PK is rejected. The
+    # docs delta is a subset of the batch, so it is unique on the PK; the
+    # band delta is unique on ``band``: a band key names its band index,
+    # and two survivors never share a bucket (module docstring)
+    check_batch_keys(batch, pk)
     # the signature pipeline is the CPU-bound step and three actions read
     # it (bucket collect, docs write, band write — times CAS retries):
     # persist once per commit, release before returning

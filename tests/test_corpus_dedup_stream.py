@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from entangledb_spark.engine import Engine
-from entangledb_spark.sources.catalog import ConflictError
+from entangledb_spark.sources.catalog import CatalogError, ConflictError
 from entangledb_spark.streaming.corpus_dedup import (
     commit_dedup_batch,
     stream_dedup_writer,
@@ -205,6 +205,19 @@ def test_null_text_docs_dedup_as_one_class(spark, engine):
     )
     assert out2["n_new"] == 0  # later batches never re-ingest null text
     assert [d for d, _ in _docs(engine)] == [1, 3]
+
+
+@pytest.mark.parametrize(
+    "rows", [[(1, "a"), (1, "b")], [(1, "a"), (None, "b")]], ids=["duplicate", "null"]
+)
+def test_batch_pk_must_be_unique_and_non_null(spark, engine, rows):
+    """Two docs with one PK (different text, so different fingerprints)
+    would both land in the docs delta; the batch is rejected instead."""
+    v0 = engine.catalog.current_version()
+    with pytest.raises(CatalogError, match="primary key doc_id"):
+        commit_dedup_batch(engine.catalog, "corpus", "corpus_fp", "s1", _batch(spark, rows), 0)
+    assert engine.catalog.current_version() == v0
+    assert _docs(engine) == [] and _fps(engine) == []
 
 
 def test_delta_chains_are_compacted(spark, engine):

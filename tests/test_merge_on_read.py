@@ -86,6 +86,41 @@ def test_compaction_bounds_delta_chain(eng):
     eng.execute("COMMIT")
 
 
+def test_chain_past_the_key_cap_compacts(eng, monkeypatch):
+    """Every read holds the chain's keys on the driver, so a chain whose
+    delta rows pass COMPACT_KEYS folds into a base however short it is."""
+    monkeypatch.setattr(eng.catalog, "COMPACT_KEYS", 4)
+    eng.execute("INSERT INTO t VALUES (4, 40, 400)")
+    assert len(meta(eng)["deltas"]) == 2  # 4 delta rows: at the cap
+    eng.execute("DELETE FROM t WHERE id = 2")
+    m = meta(eng)
+    assert m["data"] is not None and m["deltas"] == []
+    assert sorted(eng.execute("SELECT id, a FROM t").rows) == [(1, 10), (3, 30), (4, 40)]
+
+
+def test_compaction_of_multi_file_deltas_writes_one_base_file(spark, tmp_path):
+    """Compaction shuffles the view on the PK, so a small table's new base
+    is one file however many files its deltas held."""
+    eng = Engine(spark, str(tmp_path / "db"))
+    eng.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, a INTEGER)")
+    cat = eng.catalog
+    for i in range(cat.COMPACT_AFTER):
+        man = cat.manifest()
+        rows = spark.range(i * 40, (i + 1) * 40).selectExpr("id", "id * 2 AS a").repartition(4)
+        cat.stage_delta(man, "t", upserts=rows)
+        cat.publish(man)
+        if i == 0:
+            up = os.path.join(cat.base, man["tables"]["t"]["deltas"][0]["upserts"])
+            assert len([f for f in os.listdir(up) if f.endswith(".parquet")]) == 4
+    m = cat.manifest()["tables"]["t"]
+    assert m["deltas"] == []
+    base = os.path.join(cat.base, m["data"])
+    assert len([f for f in os.listdir(base) if f.endswith(".parquet")]) == 1
+    assert eng.execute("SELECT count(*), sum(a) FROM t").rows == [
+        (40 * cat.COMPACT_AFTER, sum(2 * i for i in range(40 * cat.COMPACT_AFTER)))
+    ]
+
+
 # ----------------------------------------------- MERGE USING query / view
 
 
@@ -260,10 +295,19 @@ def _file_scans(df) -> tuple[int, str]:
     return sum("parquet" in ln and "Relation" in ln for ln in plan.splitlines()), plan
 
 
-def test_resolved_view_plan_has_at_most_three_scans(spark, tmp_path):
-    """However long the chain, a resolved view scans the base, all upserts
-    and all tombstones — at most three file scans — and holds no RDD. The
-    change feed's plan does not grow with the chain either."""
+def _shuffles(df) -> list[str]:
+    """The shuffle ``Exchange`` nodes of ``df``'s executed plan (a
+    ``BroadcastExchange`` is not a shuffle)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if re.search(r"\bExchange\b", ln)]
+
+
+def test_resolved_view_plan_is_one_scan_and_a_local_anti_join(spark, tmp_path):
+    """However long the chain, a resolved view is ONE file scan of the base
+    and every upsert, anti-joined against a LocalRelation of the chain's
+    keys: no window, no shuffle, no RDD."""
     from pyspark.sql import functions as F
 
     eng = Engine(spark, str(tmp_path / "db"))
@@ -278,8 +322,6 @@ def test_resolved_view_plan_has_at_most_three_scans(spark, tmp_path):
         scans, plan = _file_scans(view)
         assert scans == 0 and "LocalRelation" in plan, plan
         assert "LogicalRDD" not in plan, plan
-    v0 = cat.current_version()
-    feed_scans = set()
     for n in range(1, cat.COMPACT_AFTER):
         # each UPDATE of the PK writes an upsert and a tombstone directory
         eng.execute(f"UPDATE t SET id = id + 1 WHERE id > {n}")
@@ -287,10 +329,45 @@ def test_resolved_view_plan_has_at_most_three_scans(spark, tmp_path):
         assert len(man["tables"]["t"]["deltas"]) == n
         for view in (cat.read_df(man, "t"), cat.read_df_pruned(man, "t", F.col("id") > 3)):
             scans, plan = _file_scans(view)
-            assert scans == 3, plan
-            assert "LogicalRDD" not in plan, plan
-        scans, plan = _file_scans(cat.changes_df("t", v0, cat.current_version()))
-        assert "LogicalRDD" not in plan, plan
-        feed_scans.add(scans)
-    assert len(feed_scans) == 1
+            assert scans == 1, plan
+            assert "Window" not in plan and "LogicalRDD" not in plan, plan
+            assert "Join LeftAnti" in plan, plan
+            anti = plan[plan.index("Join LeftAnti"):].splitlines()
+            assert anti[-1].lstrip(" +-").startswith("LocalRelation"), plan
+            assert _shuffles(view) == [], _shuffles(view)
     assert max(r[0] for r in eng.execute("SELECT id FROM t").rows) == 20 + cat.COMPACT_AFTER - 1
+
+
+def test_change_feed_reads_each_side_once(spark, tmp_path):
+    """The change feed's fast path scans the tail's upserts and the from_v
+    view once each, with no window, at every tail length; its rows match
+    a full diff of the two snapshots."""
+    eng = Engine(spark, str(tmp_path / "db"))
+    eng.execute("CREATE TABLE src (id INTEGER PRIMARY KEY, a INTEGER)")
+    eng.execute(f"INSERT INTO src VALUES {_values([(i, i) for i in range(1, 21)])}")
+    eng.execute("CREATE TABLE t AS SELECT id, a FROM src")
+    cat = eng.catalog
+    v0 = cat.current_version()
+    before = {r[0]: r for r in eng.execute("SELECT id, a FROM t").rows}
+    writes = [
+        "UPDATE t SET id = id + 100 WHERE id > 17",
+        "DELETE FROM t WHERE id = 2",
+        "INSERT INTO t VALUES (50, 5), (2, 22)",
+        "UPDATE t SET a = a + 1000 WHERE id < 5",
+        "DELETE FROM t WHERE id = 50",
+        "DELETE FROM t WHERE id = 999",
+        "UPDATE t SET id = id + 1 WHERE id > 15",
+    ]
+    for n, sql in enumerate(writes, start=1):
+        eng.execute(sql)
+        assert len(cat.manifest()["tables"]["t"]["deltas"]) == n
+        feed = cat.changes_df("t", v0, cat.current_version())
+        scans, plan = _file_scans(feed)
+        assert scans <= 3 and "Window" not in plan and "LogicalRDD" not in plan, plan
+        after = {r[0]: r for r in eng.execute("SELECT id, a FROM t").rows}
+        want = sorted(
+            [(*after[k], "insert") for k in after.keys() - before.keys()]
+            + [(*before[k], "delete") for k in before.keys() - after.keys()]
+            + [(*after[k], "update") for k in after.keys() & before.keys() if after[k] != before[k]]
+        )
+        assert sorted(tuple(r) for r in feed.collect()) == want, sql

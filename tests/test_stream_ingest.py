@@ -241,3 +241,30 @@ def test_many_batches_trigger_compaction(spark, engine, tmp_path):
     assert len(meta.get("deltas", [])) < engine.catalog.COMPACT_AFTER
     n = engine.catalog.COMPACT_AFTER + 2
     assert _rows(engine) == [(i, i) for i in range(n)]
+
+
+@pytest.mark.parametrize(
+    "rows, error",
+    [
+        ([(1, 10), (2, 20), (1, 11)], "2 rows with primary key id = 1"),
+        ([(1, 10), (None, 20)], "NULL primary key id"),
+    ],
+)
+def test_batch_with_duplicate_or_null_pk_is_rejected(spark, engine, rows, error):
+    """A delta's upserts must be unique and non-null on the PK: a
+    micro-batch that is not fails loudly before any file is written."""
+    import os
+
+    from entangledb_spark.sources.catalog import CatalogError
+
+    _mk_table(engine)
+    v0 = engine.catalog.current_version()
+    data = os.path.join(engine.catalog.base, "data")
+    files = sorted(os.walk(data))
+    batch = spark.createDataFrame(rows, "id long, v long")
+    with pytest.raises(CatalogError, match=error):
+        commit_stream_batch(engine.catalog, "ev", "s1", batch, 0)
+    assert engine.catalog.current_version() == v0
+    assert "s1" not in engine.catalog.manifest().get("streams", {})
+    assert sorted(os.walk(data)) == files
+    assert _rows(engine) == []
