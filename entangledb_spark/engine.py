@@ -43,6 +43,7 @@ from entangledb_spark.plans import ast
 from entangledb_spark.plans.compiler import (
     RECURSIVE_CTE_MAX_ITERS,
     _carry_versioned,
+    _chain_reader,
     compile_statement,
 )
 from entangledb_spark.plans.lexer import LexError
@@ -326,7 +327,7 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
         if isinstance(stmt, ast.Rollback):
             return self._rollback()
         if isinstance(stmt, (ast.Select, ast.SetOp, ast.With)):
-            df = compile_statement(stmt, self.spark, self._reader())
+            df = compile_statement(stmt, self.spark, self._query_reader(stmt)[0])
             if _is_constant_query(stmt):
                 # FROM-less (Nothing-node) selects are a handful of constant
                 # rows: materialize eagerly so expression runtime errors
@@ -431,11 +432,18 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
         return result
 
     def _reader(self):
-        if self._txn is not None:
-            manifest = self._txn
-        else:
-            manifest = self.catalog.manifest(self._txn_version)
-        return self._reader_for(manifest)
+        return self._reader_for(self._manifest_for_read())
+
+    def _query_reader(self, stmt: ast.Statement):
+        """The reader for query ``stmt`` and its KeyLookup (or None): where
+        the catalog serves the statement's pinned keys on the driver
+        (``SnapshotCatalog.key_lookup``), its table reads as those rows."""
+        manifest = self._manifest_for_read()
+        read = self._reader_for(manifest)
+        lookup = self.catalog.key_lookup(manifest, stmt)
+        if lookup is not None:
+            read = _chain_reader(read, lookup.table, self.catalog.lookup_df(manifest, lookup))
+        return read, lookup
 
     def _reader_for(self, manifest: dict):
         def versioned(name: str, version: int) -> DataFrame:
@@ -542,7 +550,11 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
         are distributed jobs over the change, or none at all; the table
         view itself is never collected into Python."""
         con.check_delta(
-            name, manifest["tables"], delta, lambda t: self.catalog.read_df(manifest, t)
+            name,
+            manifest["tables"],
+            delta,
+            lambda t: self.catalog.read_df(manifest, t),
+            lambda t, keys: self.catalog.read_keys_df(manifest, t, keys),
         )
 
 

@@ -91,6 +91,7 @@ class DmlStatements:
                 upserts=new_rows,
                 kept=self.catalog.read_df(manifest, stmt.table),
                 rows=rows,
+                inserting=True,
             ),
         )
         # merge-on-read: only the new rows hit disk (O(inserted), not O(table))

@@ -39,8 +39,10 @@ class ExplainStatements:
     def _explain(self, stmt: ast.Statement) -> str:
         """Our logical plan pretty-printer (plan shape mirrors plan/mod.rs:
         258-415) + Spark's physical plan for SELECTs."""
-        lines = _format_plan(stmt)
-        if isinstance(stmt, (ast.Select, ast.SetOp, ast.With)):
+        query = isinstance(stmt, (ast.Select, ast.SetOp, ast.With))
+        read, lookup = self._query_reader(stmt) if query else (None, None)
+        lines = _format_plan(stmt, lookup=lookup)
+        if query:
             import contextlib
             import io
 
@@ -48,9 +50,7 @@ class ExplainStatements:
             # fixpoint (round-9 review: EXPLAIN was executing the query)
             # — the recursive CTE compiles as a lazy anchor ∪ first-step
             # plan instead, zero Spark jobs
-            df = compile_statement(
-                stmt, self.spark, self._reader(), recursive_cte_mode="unroll1"
-            )
+            df = compile_statement(stmt, self.spark, read, recursive_cte_mode="unroll1")
             if isinstance(stmt, ast.With) and stmt.recursive:
                 lines += [
                     "",
@@ -85,12 +85,13 @@ class ExplainStatements:
                 "EXPLAIN ANALYZE supports SELECT queries only (DML/DDL "
                 "would execute the write while profiling it)"
             )
-        df = compile_statement(stmt, self.spark, self._reader())
+        read, lookup = self._query_reader(stmt)
+        df = compile_statement(stmt, self.spark, read)
         jqe = df._jdf.queryExecution()
         t0 = _time.perf_counter()
         n_rows = jqe.executedPlan().execute().count()
         wall_ms = round((_time.perf_counter() - t0) * 1000.0, 1)
-        lines = _format_plan(stmt)
+        lines = _format_plan(stmt, lookup=lookup)
         lines += [
             "",
             f"Executed: {n_rows} row(s) in {wall_ms} ms",
@@ -130,7 +131,9 @@ def _walk_executed_plan(node, depth: int, out: list) -> None:
 
 
 
-def _format_plan(stmt: ast.Statement, indent: int = 0) -> list[str]:
+def _format_plan(stmt: ast.Statement, indent: int = 0, lookup=None) -> list[str]:
+    """The logical plan of ``stmt``; ``lookup`` is the KeyLookup that
+    serves its FROM table (``SnapshotCatalog.key_lookup``), if any."""
     pad = "  " * indent
     if isinstance(stmt, ast.With):
         kw = "With Recursive" if stmt.recursive else "With"
@@ -164,17 +167,19 @@ def _format_plan(stmt: ast.Statement, indent: int = 0) -> list[str]:
         if stmt.where is not None:
             lines.append(f"{pad}  Filter {stmt.where}")
         if stmt.from_ is not None:
-            lines.extend(_format_from(stmt.from_, indent + 1))
+            lines.extend(_format_from(stmt.from_, indent + 1, lookup))
         else:
             lines.append(f"{pad}  Nothing")
         return lines
     return [f"{pad}{type(stmt).__name__} {stmt}"]
 
 
-def _format_from(item: ast.FromItem, indent: int) -> list[str]:
+def _format_from(item: ast.FromItem, indent: int, lookup=None) -> list[str]:
     pad = "  " * indent
     if isinstance(item, ast.TableRef):
         alias = f" as {item.alias}" if item.alias else ""
+        if lookup is not None:
+            return [f"{pad}KeyLookup {item.name}{alias} keys={list(lookup.keys)!r}"]
         return [f"{pad}Scan {item.name}{alias}"]
     if isinstance(item, ast.TableFunc):
         alias = f" as {item.alias}" if item.alias else ""

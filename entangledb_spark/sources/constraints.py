@@ -16,11 +16,13 @@ constraint, so a violation needs a written or a removed row:
   ``INSERT … VALUES`` rows are checked in Python, with no Spark job.
 - PRIMARY KEY / UNIQUE: duplicates inside the upserts, then upsert
   values that a kept row already holds — probed with ``col IN (…)`` when
-  the values are literals (Catalyst pushes a PK filter through the
-  merge-on-read anti-join into row-group pruning), else a semi-join.
+  the values are literals, else a semi-join. An INSERT's kept rows are
+  the whole table, so its literal primary keys are probed by reading
+  just those keys' rows (the catalog's KeyLookup, on the driver).
 - FOREIGN KEY, child side: the upserts' distinct values anti-joined
   against the parent's keys (for a self-reference the parent is
-  ``kept ∪ upserts``; NaN skips the check, schema.rs:248).
+  ``kept ∪ upserts``; NaN skips the check, schema.rs:248); literal
+  values read just those keys' rows of the parent.
 - FOREIGN KEY, parent side: removed keys that a remaining row still
   references, a semi-join of the children's values against the removed
   keys.
@@ -58,7 +60,9 @@ class Delta:
     column order when they are literals (INSERT … VALUES). ``columns``
     names the columns whose values can change (None: all), ``literals``
     the ones an UPDATE sets to a literal. ``deleting`` marks a DELETE,
-    whose referenced-key error names the removal."""
+    whose referenced-key error names the removal. ``inserting`` marks an
+    INSERT, whose ``kept`` is the table's whole view: its literal primary
+    keys are probed by reading just their rows."""
 
     upserts: Optional[DataFrame] = None
     kept: Optional[DataFrame] = None
@@ -67,6 +71,7 @@ class Delta:
     columns: Optional[frozenset] = None
     literals: dict = field(default_factory=dict)
     deleting: bool = False
+    inserting: bool = False
 
 
 def _null_error(name: str, col: str) -> ConstraintError:
@@ -218,16 +223,16 @@ def _first_repeat(values: list) -> Any:
         seen.add(_group_key(v))
 
 
-def _check_literal_references(name: str, c: dict, values: list, target_df_and_pk) -> None:
-    """check_foreign_keys for literal values: one probe of the parent with
-    ``pk IN (…)``, which Catalyst pushes through the merge-on-read
-    anti-join."""
+def _check_literal_references(
+    name: str, c: dict, values: list, probe: Callable, pk: str
+) -> None:
+    """check_foreign_keys for literal values: the parent's rows holding
+    them, read by ``probe`` (``pk`` names the parent's key)."""
     if c["datatype"] == "FLOAT":
         values = [v for v in values if not math.isnan(v)]
     if not values:
         return
-    tdf, pk = target_df_and_pk(c["references"])
-    found = {_group_key(r[0]) for r in tdf.filter(F.col(pk).isin(values)).select(pk).collect()}
+    found = {_group_key(r[0]) for r in probe(c["references"], values).select(pk).collect()}
     missing = [v for v in values if _group_key(v) not in found]
     if missing:
         raise _missing_error(name, c, missing[0])
@@ -249,11 +254,13 @@ def check_delta(
     tables: dict,
     delta: Delta,
     read: Callable[[str], DataFrame],
+    probe: Callable[[str, list], DataFrame],
 ) -> None:
     """Check what ``delta`` can newly violate in table ``name``, in the
     order a full-table check reports it: NOT NULL/length, then UNIQUE,
-    then FOREIGN KEY. ``tables`` is the pending manifest's table map and
-    ``read(table)`` its merge-on-read view."""
+    then FOREIGN KEY. ``tables`` is the pending manifest's table map,
+    ``read(table)`` its merge-on-read view and ``probe(table, keys)`` the
+    rows of that view whose primary key is one of ``keys``."""
     columns = tables[name]["columns"]
     pk = next(c["name"] for c in columns if c["primary_key"])
     changing = [c for c in columns if delta.columns is None or c["name"] in delta.columns]
@@ -282,7 +289,9 @@ def check_delta(
                 raise _duplicate_error(name, c, dupe)
             if n == 0 or kept is None:
                 continue
-            if col in known:
+            if col in known and c["primary_key"] and delta.inserting:
+                clash = probe(name, known[col])
+            elif col in known:
                 clash = kept.filter(F.col(col).isin(known[col]))
             else:
                 clash = kept.join(ups.select(col), on=col, how="left_semi")
@@ -299,10 +308,13 @@ def check_delta(
         """The table after the statement: kept ∪ upserts."""
         return reduce(DataFrame.unionByName, [d for d in (kept, ups) if d is not None])
 
+    def parent_pk(table: str) -> str:
+        return next(c["name"] for c in tables[table]["columns"] if c["primary_key"])
+
     def parent(table: str):
         if table == name:
             return after(), pk
-        return read(table), next(c["name"] for c in tables[table]["columns"] if c["primary_key"])
+        return read(table), parent_pk(table)
 
     if delta.deleting:
         # DELETE: every referencing column in manifest order, like the
@@ -318,7 +330,9 @@ def check_delta(
             continue
         if ups is not None and c in changing:
             if rows is not None and c["references"] != name:
-                _check_literal_references(name, c, _row_values(rows, columns, c), parent)
+                _check_literal_references(
+                    name, c, _row_values(rows, columns, c), probe, parent_pk(c["references"])
+                )
             else:
                 check_foreign_keys(name, ups, [c], parent)
         if c["references"] == name and removed is not None:

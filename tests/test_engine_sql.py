@@ -334,8 +334,12 @@ def test_explain(eng):
     setup_movies(eng)
     r = eng.execute("EXPLAIN SELECT title FROM movies WHERE id = 1")
     text = "\n".join(t[0] for t in r.rows)
-    assert "Select" in text and "Scan movies" in text
-    assert "Physical (Catalyst)" in text
+    assert "Select" in text and "KeyLookup movies keys=[1]" in text
+    assert "Scan movies" not in text
+    assert "Physical (Catalyst)" in text and "LocalTableScan" in text
+    r = eng.execute("EXPLAIN SELECT title FROM movies WHERE id > 1")
+    text = "\n".join(t[0] for t in r.rows)
+    assert "Scan movies" in text and "KeyLookup" not in text
 
 
 def test_explain_analyze(eng):

@@ -90,6 +90,22 @@ def test_unchanged_rows_never_reported(eng):
     assert {r[0] for r in got} == {2}
 
 
+@pytest.mark.parametrize("compact", [False, True])
+def test_unchanged_rewrite_is_no_change_on_both_paths(eng, compact):
+    """A rewrite that leaves a row as it was reports nothing, whether the
+    delta fast path or the post-compaction snapshot diff answers; NULL
+    and NaN values compare null-safely."""
+    eng.execute("CREATE TABLE c (id INTEGER PRIMARY KEY, a INTEGER, f FLOAT)")
+    eng.execute("INSERT INTO c VALUES (1, NULL, NAN), (2, 2, 2.0)")
+    v0 = eng.catalog.current_version()
+    eng.execute("UPDATE c SET a = a WHERE id = 1")
+    eng.execute("UPDATE c SET f = f, a = 3 WHERE id = 2")
+    if compact:
+        eng.execute("OPTIMIZE c FILES 1")
+        assert not eng.catalog.manifest()["tables"]["c"]["deltas"]
+    assert changes(eng, "c", v0) == [(2, 3, 2.0, "update")]
+
+
 def test_cli_changes_command(eng):
     from entangledb_spark.cli import run_command
 
