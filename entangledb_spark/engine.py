@@ -544,19 +544,6 @@ class Engine(DdlStatements, DmlStatements, MatviewStatements, ExplainStatements)
     def _pk_of(self, meta: dict) -> str:
         return next(c["name"] for c in meta["columns"] if c["primary_key"])
 
-    def _check_delta(self, manifest: dict, name: str, delta: con.Delta) -> None:
-        """Check what one statement's change to ``name`` can newly violate
-        (sources/constraints.py), against the pending manifest. The checks
-        are distributed jobs over the change, or none at all; the table
-        view itself is never collected into Python."""
-        con.check_delta(
-            name,
-            manifest["tables"],
-            delta,
-            lambda t: self.catalog.read_df(manifest, t),
-            lambda t, keys: self.catalog.read_keys_df(manifest, t, keys),
-        )
-
 
 def _is_constant_query(stmt: ast.Statement) -> bool:
     """True for FROM-less selects (and set-op chains of them) — results are

@@ -27,6 +27,7 @@ from entangledb_spark.sources.catalog import (
     CatalogError,
     column_to_dict,
     schema_of,
+    typed_rows,
 )
 
 
@@ -84,7 +85,7 @@ class DmlStatements:
         # an Arrow LocalRelation: writing it runs no Python worker; one
         # partition, so the delta is one parquet file
         new_rows = local_df(self.spark, rows, schema).coalesce(1)
-        self._check_delta(
+        self.catalog.check_delta(
             manifest,
             stmt.table,
             con.Delta(
@@ -110,41 +111,10 @@ class DmlStatements:
             raise EngineError(
                 f"INSERT SELECT column count {len(src_df.columns)} does not match {len(names)}"
             )
-        src_df = src_df.toDF(*names)
-        src_types = dict(src_df.dtypes)
-        # strict write typing like the VALUES path (_coerce_row): a source
-        # column must already have the target's type family (int widens to
-        # float); no silent string/float→int casts
-        compatible = {
-            "BOOLEAN": {"boolean"},
-            "INTEGER": {"tinyint", "smallint", "int", "bigint"},
-            "FLOAT": {"tinyint", "smallint", "int", "bigint", "float", "double"},
-            "STRING": {"string"},
-        }
-        by_name = {c["name"]: c for c in cols}
-        for n in names:
-            st = src_types[n]
-            if st != "void" and st not in compatible[by_name[n]["datatype"]]:
-                raise EngineError(
-                    f"invalid value of type {st} for "
-                    f"{by_name[n]['datatype'].lower()} column {n} in table {stmt.table}"
-                )
-        out_cols = []
-        for c in cols:
-            if c["name"] in names:
-                out_cols.append(
-                    F.col(c["name"]).cast(SPARK_TYPES[c["datatype"]]).alias(c["name"])
-                )
-            elif c["has_default"]:
-                out_cols.append(
-                    F.lit(c["default"]).cast(SPARK_TYPES[c["datatype"]]).alias(c["name"])
-                )
-            else:
-                raise EngineError(
-                    f"no value given for column {c['name']} in table {stmt.table}"
-                )
-        new_rows = src_df.select(*out_cols)
-        self._check_delta(
+        # strict write typing like the VALUES path (_coerce_row), shared
+        # with the stream writers: no silent string/float→int casts
+        new_rows = typed_rows(stmt.table, src_df.toDF(*names), cols)
+        self.catalog.check_delta(
             manifest,
             stmt.table,
             con.Delta(upserts=new_rows, kept=self.catalog.read_df(manifest, stmt.table)),
@@ -182,7 +152,7 @@ class DmlStatements:
         casted = df.select(
             *[F.col(n).cast(t).alias(n) for (n, _), t in zip(df.dtypes, target_types)]
         )
-        self._check_delta(manifest, stmt.name, con.Delta(upserts=casted))
+        self.catalog.check_delta(manifest, stmt.name, con.Delta(upserts=casted))
         # the rows become the base, not a first delta; the count comes from
         # the written files' footers instead of running the query again
         data = self.catalog.write_snapshot(stmt.name, casted)
@@ -261,7 +231,7 @@ class DmlStatements:
         pk = self._pk_of(meta)
         changed = out.filter(F.col("__upd")).drop("__upd")
         old_keys = flagged.filter(F.col("__upd")).select(pk) if pk in updates else None
-        self._check_delta(
+        self.catalog.check_delta(
             manifest,
             stmt.table,
             con.Delta(
@@ -525,7 +495,7 @@ class DmlStatements:
         removed = del_keys
         if del_keys is not None and upserts is not None:
             removed = del_keys.join(upserts.select(pk), on=pk, how="left_anti")
-        self._check_delta(
+        self.catalog.check_delta(
             manifest,
             stmt.target,
             con.Delta(
@@ -583,7 +553,7 @@ class DmlStatements:
         removed = df.filter(pred).select(pk)
         # delete-side FK: no surviving row may reference a removed key
         # (engine/kv.rs:157-176)
-        self._check_delta(
+        self.catalog.check_delta(
             manifest,
             stmt.table,
             con.Delta(

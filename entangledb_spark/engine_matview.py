@@ -308,14 +308,6 @@ class MatviewStatements:
         if k > self.MV_INCREMENTAL_MAX_GROUPS:
             return None
         base_read = self._reader()
-
-        def _nullsafe_on(left: DataFrame, right: DataFrame, lcols, rcols):
-            cond = None
-            for lc, rc in zip(lcols, rcols):
-                c = left[lc].eqNullSafe(right[rc])
-                cond = c if cond is None else (cond & c)
-            return cond
-
         aff_b = F.broadcast(affected)
 
         def refresh_reader(name: str) -> DataFrame:
@@ -589,13 +581,6 @@ class MatviewStatements:
             return None, 0
         if k > self.MV_INCREMENTAL_MAX_GROUPS:
             return None
-
-        def _nullsafe_on(left: DataFrame, right: DataFrame, lcols, rcols):
-            cond = None
-            for lc, rc in zip(lcols, rcols):
-                c = left[lc].eqNullSafe(right[rc])
-                cond = c if cond is None else (cond & c)
-            return cond
 
         table_cols = {
             name: [(col, out) for t, col, out in keys if t == name]
@@ -927,13 +912,6 @@ class MatviewStatements:
         if k > self.MV_INCREMENTAL_MAX_GROUPS:
             return None
 
-        def _nullsafe_on(left: DataFrame, right: DataFrame, lcols, rcols):
-            cond = None
-            for lc, rc in zip(lcols, rcols):
-                c = left[lc].eqNullSafe(right[rc])
-                cond = c if cond is None else (cond & c)
-            return cond
-
         def refresh_reader(name: str) -> DataFrame:
             df = base_read(name)
             if name == anchor:
@@ -995,6 +973,15 @@ class MatviewStatements:
         out["refresh_path"] = kind or "full"
         return out
 
+
+def _nullsafe_on(left: DataFrame, right: DataFrame, lcols, rcols):
+    """Join condition: ``left[lcols]`` equals ``right[rcols]`` column by
+    column, NULL matching NULL."""
+    cond = None
+    for lc, rc in zip(lcols, rcols):
+        c = left[lc].eqNullSafe(right[rc])
+        cond = c if cond is None else (cond & c)
+    return cond
 
 
 _MV_AGGS = {"count", "sum", "min", "max", "avg"}

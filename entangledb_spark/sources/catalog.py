@@ -51,12 +51,22 @@ from pyspark.sql import types as T
 
 from entangledb_spark.plans import ast
 from entangledb_spark.session import local_df
+from entangledb_spark.sources import constraints as con
 
 SPARK_TYPES = {
     "BOOLEAN": T.BooleanType(),
     "INTEGER": T.LongType(),
     "FLOAT": T.DoubleType(),
     "STRING": T.StringType(),
+}
+
+# Spark simpleStrings a column of each engine type accepts on write: an
+# integer widens to FLOAT; nothing narrows, and nothing is cast silently.
+WRITABLE_TYPES = {
+    "BOOLEAN": {"boolean"},
+    "INTEGER": {"tinyint", "smallint", "int", "bigint"},
+    "FLOAT": {"tinyint", "smallint", "int", "bigint", "float", "double"},
+    "STRING": {"string"},
 }
 
 # engine datatype ← Spark simpleString (for ATTACH schema inference)
@@ -112,6 +122,36 @@ def schema_of(columns: list[dict], physical: bool = False) -> T.StructType:
         name = c.get("physical", c["name"]) if physical else c["name"]
         fields.append(T.StructField(name, t, c["nullable"]))
     return T.StructType(fields)
+
+
+def typed_rows(name: str, df: DataFrame, columns: list[dict]) -> DataFrame:
+    """``df`` as rows of table ``name`` (column list ``columns``): the
+    write typing of INSERT … SELECT and the stream writers. Each table
+    column ``df`` holds, by name, is cast to its stored type when its
+    Spark type is in the column's ``WRITABLE_TYPES`` (``void``, an untyped
+    NULL, fits any); a column ``df`` lacks takes its DEFAULT; columns
+    outside the table are dropped. A type outside the family, or a
+    missing column without a DEFAULT, is a ConstraintError."""
+    from pyspark.sql import functions as F
+
+    src = dict(df.dtypes)
+    for c in columns:
+        st = src.get(c["name"], "void")
+        if st != "void" and st not in WRITABLE_TYPES[c["datatype"]]:
+            raise con.ConstraintError(
+                f"invalid value of type {st} for "
+                f"{c['datatype'].lower()} column {c['name']} in table {name}"
+            )
+    out = []
+    for c in columns:
+        if c["name"] in src:
+            value = F.col(c["name"])
+        elif c["has_default"]:
+            value = F.lit(c["default"])
+        else:
+            raise con.ConstraintError(f"no value given for column {c['name']} in table {name}")
+        out.append(value.cast(SPARK_TYPES[c["datatype"]]).alias(c["name"]))
+    return df.select(*out)
 
 
 def _quote(name: str) -> str:
@@ -465,7 +505,7 @@ class SnapshotCatalog:
 
         with ``keys`` from ``_chain_keys`` (a broadcast, no shuffle). This
         is exact because the base and each delta's upserts are unique on
-        the PK (check_delta and the streaming writers keep them so). At
+        the PK (every writer's check_delta keeps them so). At
         equal delta an upsert (``2i``) outranks a tombstone (``2i-1``), so
         UPDATE pk=pk+1, which writes both in one delta, resolves.
         ``predicate`` filters ``rows`` (see read_df_pruned).
@@ -665,9 +705,10 @@ class SnapshotCatalog:
 
         ``partition_by`` encodes those columns in the directory layout
         (Hive-style) so later reads can prune files by partition value —
-        the ann_index.py recipe generalized to catalog tables. Callers
-        writing a table whose meta declares ``partition_by`` must pass it
-        so every snapshot/delta of the table shares one layout."""
+        the ann_index.py recipe generalized to catalog tables. A managed
+        table's rows are written through ``write_delta``, which passes the
+        table's layout; only CREATE TABLE AS and materialized-view
+        snapshots call this directly."""
         rel = os.path.join("data", name, uuid.uuid4().hex[:12])
         w = df.write.mode("overwrite")
         if partition_by:
@@ -679,6 +720,43 @@ class SnapshotCatalog:
             )
         w.parquet(os.path.join(self.base, rel))
         return rel
+
+    def _partition_cols(self, meta: dict) -> list[str]:
+        """The stored names of table entry ``meta``'s ``partition_by``
+        columns (logical names, kept current by RENAME COLUMN)."""
+        by_name = {c["name"]: c for c in meta["columns"]}
+        return [physical_name(by_name.get(p, {"name": p})) for p in meta.get("partition_by") or []]
+
+    def write_delta(
+        self,
+        meta: dict,
+        name: str,
+        upserts: Optional[DataFrame] = None,
+        deletes: Optional[DataFrame] = None,
+    ) -> Optional[dict]:
+        """Write logical-named ``upserts`` (full rows) and ``deletes`` (PK
+        tombstones) of table ``name`` (entry ``meta``) as file sets in the
+        table's stored layout: physical column names, and the upserts
+        partitioned like every other file set of the table. Returns the
+        delta entry ({'upserts': path, 'deletes': path}), None when both
+        are None. Every writer of a managed table's rows comes here;
+        whether a delta may be published is ``check_delta``'s call."""
+        delta: dict = {}
+        if upserts is not None:
+            delta["upserts"] = self.write_snapshot(
+                name, self._to_physical(upserts, meta["columns"]), self._partition_cols(meta)
+            )
+        if deletes is not None:
+            # tombstones carry only the pk — never partition-encoded
+            delta["deletes"] = self.write_snapshot(
+                name, self._to_physical(deletes, meta["columns"])
+            )
+        return delta or None
+
+    def append_delta(self, manifest: dict, name: str, delta: dict) -> None:
+        """Put the written ``delta`` (``write_delta``) at the end of table
+        ``name``'s chain in the pending ``manifest``."""
+        manifest["tables"][name].setdefault("deltas", []).append(delta)
 
     def stage_delta(
         self,
@@ -693,27 +771,27 @@ class SnapshotCatalog:
         row counts from the written files' footers instead of re-running
         the matching job."""
         meta = manifest["tables"][name]
-        cols_meta = meta["columns"]
-        by_name = {c["name"]: c for c in cols_meta}
-        part_by = meta.get("partition_by")
-        if part_by:
-            part_by = [physical_name(by_name.get(p, {"name": p})) for p in part_by]
-        delta: dict = {}
-        if upserts is not None:
-            delta["upserts"] = self.write_snapshot(
-                name, self._to_physical(upserts, cols_meta), part_by
-            )
-        if deletes is not None:
-            # tombstones carry only the pk — never partition-encoded
-            delta["deletes"] = self.write_snapshot(
-                name, self._to_physical(deletes, cols_meta)
-            )
-        if not delta:
+        delta = self.write_delta(meta, name, upserts, deletes)
+        if delta is None:
             return None
-        meta.setdefault("deltas", []).append(delta)
+        self.append_delta(manifest, name, delta)
         if self.chain_full(meta):
             self.compact(manifest, name)
         return delta
+
+    def check_delta(self, manifest: dict, name: str, delta: con.Delta) -> None:
+        """Check what one change to ``name`` can newly violate
+        (sources/constraints.py), against the pending ``manifest``: its
+        views are read with ``read_df`` and pinned keys with
+        ``read_keys_df``. The checks are distributed jobs over the change,
+        or none at all; the table view itself is never collected."""
+        con.check_delta(
+            name,
+            manifest["tables"],
+            delta,
+            lambda t: self.read_df(manifest, t),
+            lambda t, keys: self.read_keys_df(manifest, t, keys),
+        )
 
     def chain_full(self, meta: dict) -> bool:
         """Whether the delta chain of table entry ``meta`` must fold into
@@ -754,11 +832,6 @@ class SnapshotCatalog:
         ``view`` lets OPTIMIZE pass a re-clustered frame (same rows,
         different layout) through the identical physical-write funnel."""
         meta = manifest["tables"][name]
-        cols_meta = meta["columns"]
-        by_name = {c["name"]: c for c in cols_meta}
-        part_by = meta.get("partition_by")
-        if part_by:
-            part_by = [physical_name(by_name.get(p, {"name": p})) for p in part_by]
         if view is None:
             # one shuffle on the PK: the resolve keeps the input files'
             # splits, so without it the new base would hold a file per
@@ -767,9 +840,7 @@ class SnapshotCatalog:
             # file is sorted on the PK, so footer min/max prune PK probes.
             pk = self._pk_of(meta)
             view = self.read_df(manifest, name).repartition(pk).sortWithinPartitions(pk)
-        meta["data"] = self.write_snapshot(
-            name, self._to_physical(view, cols_meta), part_by
-        )
+        meta["data"] = self.write_delta(meta, name, upserts=view)["upserts"]
         meta["deltas"] = []
 
     def compact_small_files(
@@ -807,11 +878,7 @@ class SnapshotCatalog:
                 (g[0] if os.path.getsize(p) < threshold else g[1]).append(p)
         if not any(len(small) >= 2 for small, _ in groups.values()):
             return None
-        by_name = {c["name"]: c for c in meta["columns"]}
-        phys_part = {
-            physical_name(by_name.get(p, {"name": p}))
-            for p in (meta.get("partition_by") or [])
-        }
+        phys_part = set(self._partition_cols(meta))
         # files inside a Hive layout do NOT store the partition columns —
         # read them with the file schema, the directory path keeps the
         # partition values
@@ -882,8 +949,6 @@ class SnapshotCatalog:
 
         ``equalities``: {logical partition column: literal value}."""
         meta = manifest["tables"][name]
-        part_by = meta.get("partition_by") or []
-        by_name = {c["name"]: c for c in meta["columns"]}
 
         from pyspark.sql import functions as F
 
@@ -892,7 +957,7 @@ class SnapshotCatalog:
             term = F.col(c).eqNullSafe(F.lit(v))
             pred = term if pred is None else (pred & term)
         view = self.read_df(manifest, name).filter(pred)
-        phys_parts = [physical_name(by_name[p]) for p in part_by]
+        phys_parts = self._partition_cols(meta)
         if zorder:
             from entangledb_spark.sources.layout import zorder_frame
 

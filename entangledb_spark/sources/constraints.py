@@ -62,7 +62,9 @@ class Delta:
     the ones an UPDATE sets to a literal. ``deleting`` marks a DELETE,
     whose referenced-key error names the removal. ``inserting`` marks an
     INSERT, whose ``kept`` is the table's whole view: its literal primary
-    keys are probed by reading just their rows."""
+    keys are probed by reading just their rows. ``upserting`` marks an
+    upsert by primary key (a stream batch), whose ``kept`` holds no key of
+    the upserts: its primary key cannot clash with a kept row."""
 
     upserts: Optional[DataFrame] = None
     kept: Optional[DataFrame] = None
@@ -72,6 +74,7 @@ class Delta:
     literals: dict = field(default_factory=dict)
     deleting: bool = False
     inserting: bool = False
+    upserting: bool = False
 
 
 def _null_error(name: str, col: str) -> ConstraintError:
@@ -287,7 +290,7 @@ def check_delta(
             if n > d:
                 dupe = _first_repeat(known[col]) if rows is not None else _duplicate_value(ups, col)
                 raise _duplicate_error(name, c, dupe)
-            if n == 0 or kept is None:
+            if n == 0 or kept is None or (c["primary_key"] and delta.upserting):
                 continue
             if col in known and c["primary_key"] and delta.inserting:
                 clash = probe(name, known[col])

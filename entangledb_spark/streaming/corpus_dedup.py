@@ -50,8 +50,6 @@ column the table stays unpartitioned (legacy full-read behavior).
 
 from __future__ import annotations
 
-import random
-import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -59,12 +57,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import Column
 
 from entangledb_spark.operators.text import fingerprint
-from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog
-from entangledb_spark.streaming.ingest import (
-    MAX_CAS_ATTEMPTS,
-    check_batch_keys,
-    maybe_compact,
-)
+from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog, typed_rows
+from entangledb_spark.streaming.ingest import cas_commit, check_upserts
 
 FP_N_BUCKETS = 256
 
@@ -113,7 +107,8 @@ def commit_dedup_batch(
     ``text_col`` defaults to the docs table's first non-pk STRING column
     — the content column dedup keys on.
     """
-    m = catalog.manifest()
+    checked = catalog.current_version()
+    m = catalog.manifest(checked)
     if batch_id <= m.get("streams", {}).get(stream_id, -1):
         return None
     for name in (docs_table, fp_table):
@@ -135,18 +130,20 @@ def commit_dedup_batch(
                 f"dedup ingest table {docs_table} has no non-pk STRING column "
                 f"to dedup on — pass text_col explicitly"
             )
-    # a PK-unique, non-null batch keeps both deltas unique on their PKs:
-    # the docs delta is a subset of the batch rows, and the fp delta has
-    # one row per written doc, with the fp the within-batch dedup made
-    # unique (NULL text maps to a sentinel fp)
-    check_batch_keys(batch_df, pk)
-    deduped = _dedup_within_batch(batch_df.select(*doc_cols), pk, text_col)
+    # the whole batch is checked like an INSERT, rows the dedup drops too.
+    # Unique and non-null docs keep the fp delta unique as well: one row
+    # per written doc, with the fp the within-batch dedup made unique
+    # (NULL text maps to a sentinel fp)
+    batch = typed_rows(docs_table, batch_df, m["tables"][docs_table]["columns"])
+    check_upserts(catalog, m, docs_table, batch)
+    deduped = _dedup_within_batch(batch, pk, text_col)
 
     # The write lives INSIDE the retry loop (unlike append-only ingest):
     # the survivor set depends on the fingerprint state the CAS protects,
     # so a lost CAS invalidates the written files, not just the pointer.
     # Each attempt costs O(batch); abandoned files are vacuum-reclaimed.
-    def attempt(m, docs_meta, fp_meta):
+    def attempt(m):
+        docs_meta, fp_meta = m["tables"][docs_table], m["tables"][fp_table]
         bucketed = any(
             c["name"] == "bucket" and not c["primary_key"]
             for c in fp_meta["columns"]
@@ -170,14 +167,12 @@ def commit_dedup_batch(
         survivors = deduped.join(
             existing, deduped["__fp"] == existing["fp"], "left_anti"
         ).select(*doc_cols, "__fp")
-        docs_rel = catalog.write_snapshot(
-            docs_table, survivors.select(*doc_cols)
-        )
+        docs = catalog.write_delta(docs_meta, docs_table, upserts=survivors.select(*doc_cols))
         # (fp, pk) rows come from the files just written, joined back to
         # the deduped batch for the fingerprint — one source of truth
         # _read_path takes the COLUMN LIST (it maps stored->logical names
         # and fills ALTER-added columns itself)
-        written = catalog._read_path(docs_rel, docs_meta["columns"])
+        written = catalog._read_path(docs["upserts"], docs_meta["columns"])
         fp_cols = [c["name"] for c in fp_meta["columns"]]
         fp_rows = (
             written.select(pk)
@@ -186,60 +181,17 @@ def commit_dedup_batch(
         )
         if bucketed:
             fp_rows = fp_rows.withColumn("bucket", fp_bucket(F.col("fp")))
-        fp_rel = catalog.write_snapshot(
-            fp_table, fp_rows.select(*fp_cols), fp_meta.get("partition_by")
-        )
-        docs_meta.setdefault("deltas", []).append({"upserts": docs_rel})
-        fp_meta.setdefault("deltas", []).append({"upserts": fp_rel})
-        return docs_rel
+        fps = catalog.write_delta(fp_meta, fp_table, upserts=fp_rows.select(*fp_cols))
+        catalog.append_delta(m, docs_table, docs)
+        catalog.append_delta(m, fp_table, fps)
+        return docs["upserts"]
 
-    return retry_cas_commit(
-        catalog, docs_table, fp_table, stream_id, batch_id, attempt
+    out = cas_commit(
+        catalog, stream_id, batch_id, (docs_table, fp_table), batch, checked, attempt
     )
-
-
-def retry_cas_commit(catalog, docs_table, key_table, stream_id, batch_id, attempt):
-    """The read-modify-write exactly-once skeleton shared by the keyed
-    dedup ingests (exact fingerprints here, MinHash band keys in
-    near_dedup.py — the index_commit.py lesson applied to streaming:
-    per-module copies of a commit protocol drift):
-
-    per CAS round — pin (version, manifest); no-op if the stream already
-    recorded this batch (redelivery); fail loudly if either table was
-    dropped; run ``attempt(m, docs_meta, key_meta)`` (reads state AT the
-    pinned version, writes doc + key deltas, appends them to the metas,
-    returns the docs relation); record the stream position; publish with
-    compare-and-swap. Losing the CAS invalidates the attempt's DECISION,
-    not just the pointer — the whole attempt re-runs against the new
-    version (a concurrent writer may have landed the same content
-    first); orphaned attempt files are unreferenced and vacuumed. After
-    a durable publish, both delta chains are best-effort compacted."""
-    for i in range(MAX_CAS_ATTEMPTS):
-        v0 = catalog.current_version()
-        m = catalog.manifest(v0)
-        if batch_id <= m.get("streams", {}).get(stream_id, -1):
-            return None
-        docs_meta = m["tables"].get(docs_table)
-        key_meta = m["tables"].get(key_table)
-        if docs_meta is None or key_meta is None:
-            raise ConflictError("dedup ingest table dropped mid-commit")
-        docs_rel = attempt(m, docs_meta, key_meta)
-        m.setdefault("streams", {})[stream_id] = batch_id
-        try:
-            v = catalog.publish(m, expected_version=v0)
-            # bound BOTH delta chains (per-batch key reads degrade
-            # linearly with chain length otherwise) — best-effort CAS
-            # after the durable publish, exactly like append-only ingest
-            for name in (docs_table, key_table):
-                maybe_compact(catalog, name)
-            return {"version": v, "n_new": catalog.count_rows(docs_rel)}
-        except ConflictError:
-            time.sleep(random.random() * min(0.01 * (2**i), 1.0))
-    raise ConflictError(
-        f"dedup stream {stream_id} batch {batch_id}: lost the manifest CAS "
-        f"{MAX_CAS_ATTEMPTS} times — failing loudly (restart replays the "
-        "batch exactly once)"
-    )
+    if out is None:
+        return None
+    return {"version": out[0], "n_new": catalog.count_rows(out[1])}
 
 
 def stream_dedup_writer(

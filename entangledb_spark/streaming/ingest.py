@@ -6,6 +6,15 @@ stream-position update in ONE atomic manifest CAS. This is the standard
 Delta-Lake-style idempotent-sink recipe (txn appId/version), built on the
 same optimistic-concurrency publish every other writer uses.
 
+A micro-batch is typed and checked like an INSERT: its columns take the
+table's stored types under the write typing of INSERT … SELECT
+(``catalog.typed_rows``; a ``double`` or ``string`` for an INTEGER column
+is an error, never a cast), and ``SnapshotCatalog.check_delta`` checks it
+as an upsert by primary key — NOT NULL, string length, PRIMARY KEY and
+UNIQUE, FOREIGN KEY — before any file is written. The catalog writes it
+(``write_delta``) in the table's stored layout: physical column names
+after RENAME COLUMN, and the ``partition_by`` directories.
+
 Why exactly-once holds:
 - foreachBatch guarantees at-least-once batch delivery with a stable,
   monotonically increasing ``batch_id`` per checkpoint (replays reuse the
@@ -30,11 +39,12 @@ from __future__ import annotations
 
 import random
 import time
-from typing import Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame
 
-from entangledb_spark.sources.catalog import CatalogError, ConflictError, SnapshotCatalog
+from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog, typed_rows
+from entangledb_spark.sources.constraints import Delta
 
 # CAS publish attempts per micro-batch before failing the stream loudly.
 # 50 attempts ≈ tens of seconds of capped-backoff contention — far beyond
@@ -56,85 +66,103 @@ def commit_stream_batch(
     other catalog writers — commit-time CAS with re-read-and-retry.
     """
     # cheap pre-check: a redelivered batch never rewrites its data files
-    m = catalog.manifest()
+    checked = catalog.current_version()
+    m = catalog.manifest(checked)
     if batch_id <= m.get("streams", {}).get(stream_id, -1):
         return None
     meta = m["tables"].get(table_name)
     if meta is None:
-        raise ConflictError(f"ingest target table {table_name} does not exist")
-    # align to the table schema (order + names); analyzer and key errors
-    # surface here, before any files are written
-    cols = [c["name"] for c in meta["columns"]]
-    batch_df = batch_df.select(*cols)
-    check_batch_keys(batch_df, catalog._pk_of(meta))
-    rel = catalog.write_snapshot(table_name, batch_df)
-    delta = {"upserts": rel}
-    # Bounded CAS retry: each attempt is cheap (manifest re-read + one
-    # publish), but an UNBOUNDED loop under sustained writer contention
-    # would spin a micro-batch forever and stall the stream with nothing
-    # surfaced. Exponential backoff with full jitter (capped) de-correlates
-    # contending writers; after MAX_CAS_ATTEMPTS the stream fails LOUDLY
-    # with ConflictError — foreachBatch propagates it, the query dies, and
-    # the replayed batch is still exactly-once on restart (its data files
-    # are unreferenced orphans reclaimed by vacuum).
-    for attempt in range(MAX_CAS_ATTEMPTS):
+        raise ConflictError(f"stream target table {table_name} does not exist")
+    # typing and constraint errors surface here, before any file is written
+    batch = typed_rows(table_name, batch_df, meta["columns"])
+    check_upserts(catalog, m, table_name, batch)
+    # the files are written once; a retry only appends the same entry
+    delta = catalog.write_delta(meta, table_name, upserts=batch)
+    out = cas_commit(
+        catalog, stream_id, batch_id, (table_name,), batch, checked,
+        lambda m: catalog.append_delta(m, table_name, delta),
+    )
+    return None if out is None else out[0]
+
+
+def check_upserts(catalog: SnapshotCatalog, manifest: dict, name: str, rows: DataFrame) -> None:
+    """Check typed ``rows`` (``typed_rows``), upserted into table ``name``
+    by primary key, with the SQL path's ``check_delta`` against
+    ``manifest``: the rows of the view whose key they do not write stay.
+    Rows must be unique and non-null on the PK — the merge-on-read resolve
+    keeps every row of a delta no later write touches."""
+    pk = catalog._pk_of(manifest["tables"][name])
+    kept = catalog.read_df(manifest, name).join(rows.select(pk), pk, "left_anti")
+    catalog.check_delta(manifest, name, Delta(upserts=rows, kept=kept, upserting=True))
+
+
+def cas_commit(
+    catalog: SnapshotCatalog,
+    stream_id: str,
+    batch_id: int,
+    tables: tuple,
+    batch: DataFrame,
+    checked: int,
+    attempt: Callable[[dict], Any],
+) -> Optional[tuple]:
+    """Publish micro-batch ``batch_id`` of stream ``stream_id`` exactly
+    once; the one CAS loop of every streaming writer. ``batch`` holds the
+    typed rows the stream upserts into ``tables[0]``, checked
+    (``check_upserts``) against version ``checked``. Each round pins a
+    version and its manifest ``m``, returns None if the stream already
+    recorded the batch (redelivery, or another attempt of it won), fails
+    if one of ``tables`` is gone, checks ``batch`` again if the version is
+    not ``checked`` (a writer landed since: its rows may clash), lets
+    ``attempt(m)`` stage the batch's deltas into ``m`` (appending
+    pre-written files, or re-deciding against ``m`` and writing new ones),
+    records the stream position and publishes with compare-and-swap.
+    Returns (published version, ``attempt``'s result).
+
+    Bounded: each round is cheap, but an UNBOUNDED loop under sustained
+    contention would spin a micro-batch forever with nothing surfaced.
+    Exponential backoff with full jitter (capped) de-correlates contending
+    writers; after MAX_CAS_ATTEMPTS the stream fails LOUDLY with
+    ConflictError — foreachBatch propagates it, the query dies, and the
+    replayed batch is still exactly-once on restart (its data files are
+    unreferenced orphans reclaimed by vacuum). After a durable publish
+    every table's chain is compacted best-effort (``maybe_compact``)."""
+    for i in range(MAX_CAS_ATTEMPTS):
         v0 = catalog.current_version()
         m = catalog.manifest(v0)
         if batch_id <= m.get("streams", {}).get(stream_id, -1):
-            return None  # lost to another attempt of this same batch
-        meta = m["tables"].get(table_name)
-        if meta is None:  # table dropped between retries
-            raise ConflictError(f"ingest target table {table_name} does not exist")
-        meta.setdefault("deltas", []).append(delta)
+            return None
+        for name in tables:
+            if name not in m["tables"]:  # dropped between rounds
+                raise ConflictError(f"stream target table {name} does not exist")
+        if v0 != checked:
+            check_upserts(catalog, m, tables[0], batch)
+            checked = v0
+        out = attempt(m)
         m.setdefault("streams", {})[stream_id] = batch_id
         try:
             v = catalog.publish(m, expected_version=v0)
-            break
         except ConflictError:
-            # full-jitter exponential backoff: U(0, base·2^attempt), capped
-            time.sleep(random.random() * min(0.01 * (2**attempt), 1.0))
-    else:
-        raise ConflictError(
-            f"stream {stream_id} batch {batch_id}: lost the manifest CAS "
-            f"{MAX_CAS_ATTEMPTS} times in a row — giving up so the stream "
-            "fails loudly instead of spinning (safe to restart: the batch "
-            "will be replayed and committed exactly once)"
-        )
-    # Compaction runs AFTER the batch is durably published (see
-    # maybe_compact for why it must not sit inside the retry loop).
-    maybe_compact(catalog, table_name)
-    return v
-
-
-def check_batch_keys(batch_df: DataFrame, pk: str) -> None:
-    """Reject a micro-batch holding a NULL or a duplicate primary key
-    with a CatalogError. A delta's upserts must be unique and non-null on
-    the PK — the merge-on-read resolve keeps every row of a delta no later
-    write touches, so two rows with one PK would both be read back. One
-    aggregate over the batch; run it before writing any file."""
-    from pyspark.sql import functions as F
-
-    bad = (
-        batch_df.groupBy(pk)
-        .count()
-        .filter(F.col(pk).isNull() | (F.col("count") > 1))
-        .take(1)
+            # full-jitter exponential backoff: U(0, base·2^i), capped
+            time.sleep(random.random() * min(0.01 * (2**i), 1.0))
+            continue
+        for name in tables:
+            maybe_compact(catalog, name)
+        return v, out
+    raise ConflictError(
+        f"stream {stream_id} batch {batch_id}: lost the manifest CAS "
+        f"{MAX_CAS_ATTEMPTS} times in a row — giving up so the stream "
+        "fails loudly instead of spinning (safe to restart: the batch "
+        "will be replayed and committed exactly once)"
     )
-    if bad:
-        key, n = bad[0]
-        if key is None:
-            raise CatalogError(f"micro-batch has a NULL primary key {pk}")
-        raise CatalogError(f"micro-batch has {n} rows with primary key {pk} = {key!r}")
 
 
 def maybe_compact(catalog: SnapshotCatalog, table_name: str) -> None:
-    """Best-effort post-publish compaction, shared by the streaming
-    commit paths (ingest + corpus_dedup): runs as its OWN CAS after the
-    batch is durable — inside a retry loop a lost CAS would discard a
-    full O(table) rewrite and redo it every iteration (conflict storm =
-    N full-table rewrites for one micro-batch). A lost compaction CAS is
-    simply skipped: the delta chain is still bounded because whichever
-    writer lands next re-checks the same threshold."""
+    """Best-effort post-publish compaction (``cas_commit``): runs as its
+    OWN CAS after the batch is durable — inside a retry loop a lost CAS
+    would discard a full O(table) rewrite and redo it every iteration
+    (conflict storm = N full-table rewrites for one micro-batch). A lost
+    compaction CAS is simply skipped: the delta chain is still bounded
+    because whichever writer lands next re-checks the same threshold."""
     v1 = catalog.current_version()
     m1 = catalog.manifest(v1)
     meta1 = m1["tables"].get(table_name)

@@ -13,8 +13,7 @@ collision chain — the distributable over-approximation).
 Corpus-lifetime state is a catalog TABLE — of LSH BAND KEYS
 (band_idx + hash of the band's signature slice, the exact banding q62's
 batch operator uses) — maintained transactionally next to the document
-table through the shared exactly-once skeleton
-(corpus_dedup.retry_cas_commit).
+table through the shared exactly-once CAS loop (ingest.cas_commit).
 
 Drop policy (chain-closed keep-first, matching the batch family's
 connected-components survivor election):
@@ -104,9 +103,8 @@ from entangledb_spark.operators._minhash_params import (
     SHINGLE_N,
 )
 from entangledb_spark.operators.dedup import minhash_signature, word_tokens
-from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog
-from entangledb_spark.streaming.corpus_dedup import retry_cas_commit
-from entangledb_spark.streaming.ingest import check_batch_keys
+from entangledb_spark.sources.catalog import ConflictError, SnapshotCatalog, typed_rows
+from entangledb_spark.streaming.ingest import cas_commit, check_upserts
 
 BAND_N_BUCKETS = 256
 
@@ -197,7 +195,8 @@ def commit_near_dedup_batch(
     tests/test_near_dedup_stream.py has the CREATE TABLEs).
     ``retract_upserted_bands`` (default True) implements the
     changed-body redelivery contract — see the module docstring."""
-    m = catalog.manifest()
+    checked = catalog.current_version()
+    m = catalog.manifest(checked)
     if batch_id <= m.get("streams", {}).get(stream_id, -1):
         return None
     for name in (docs_table, band_table):
@@ -226,16 +225,17 @@ def commit_near_dedup_batch(
     # persist one row's body with another row's band keys (the exact
     # module's min_by lesson, corpus_dedup._dedup_within_batch)
     batch = (
-        batch_df.select(*doc_cols)
+        typed_rows(docs_table, batch_df, m["tables"][docs_table]["columns"])
         .groupBy(pk)
         .agg(F.min(F.struct(*doc_cols)).alias("__row"))
         .select(*[F.col(f"__row.{c}").alias(c) for c in doc_cols])
     )
-    # the group-by makes the batch PK-unique; a NULL PK is rejected. The
-    # docs delta is a subset of the batch, so it is unique on the PK; the
-    # band delta is unique on ``band``: a band key names its band index,
-    # and two survivors never share a bucket (module docstring)
-    check_batch_keys(batch, pk)
+    # the group-by makes the batch PK-unique, and it is checked like an
+    # INSERT (a NULL PK is rejected). The docs delta is a subset of the
+    # batch, so it is unique on the PK; the band delta is unique on
+    # ``band``: a band key names its band index, and two survivors never
+    # share a bucket (module docstring)
+    check_upserts(catalog, m, docs_table, batch)
     # the signature pipeline is the CPU-bound step and three actions read
     # it (bucket collect, docs write, band write — times CAS retries):
     # persist once per commit, release before returning
@@ -255,7 +255,7 @@ def commit_near_dedup_batch(
         surv_keys = keys.join(batch_docs.select(pk), pk, "left_semi")
         return _commit_with_keys(
             catalog, docs_table, band_table, stream_id, batch_id,
-            pk, batch_docs, surv_keys, min_est_jaccard,
+            pk, batch, checked, batch_docs, surv_keys, min_est_jaccard,
             retract_upserted_bands,
         )
     finally:
@@ -263,11 +263,12 @@ def commit_near_dedup_batch(
 
 
 def _commit_with_keys(
-    catalog, docs_table, band_table, stream_id, batch_id, pk, batch_docs,
-    surv_keys, min_est_jaccard, retract_upserted_bands,
+    catalog, docs_table, band_table, stream_id, batch_id, pk, batch, checked,
+    batch_docs, surv_keys, min_est_jaccard, retract_upserted_bands,
 ):
 
-    def attempt(m, docs_meta, band_meta):
+    def attempt(m):
+        docs_meta, band_meta = m["tables"][docs_table], m["tables"][band_table]
         band_col_names = [c["name"] for c in band_meta["columns"]]
         bucketed = any(
             c["name"] == "bucket" and not c["primary_key"]
@@ -335,13 +336,13 @@ def _commit_with_keys(
             # band-only legacy rule: ANY persisted key drops the doc
             hit_docs = cand.select(pk).distinct()
         survivors = batch_docs.join(hit_docs, pk, "left_anti")
-        docs_rel = catalog.write_snapshot(docs_table, survivors)
+        docs = catalog.write_delta(docs_meta, docs_table, upserts=survivors)
         # band rows come from the files just written — one source of truth
         # _read_path takes the COLUMN LIST (it maps stored->logical names
         # and fills ALTER-added columns itself)
-        written = catalog._read_path(docs_rel, docs_meta["columns"])
+        written = catalog._read_path(docs["upserts"], docs_meta["columns"])
         band_rows = written.select(pk).join(surv_keys, pk)
-        band_delta: dict = {}
+        old_rows = None
         reject_target = stored
         if retract_upserted_bands:
             # the changed-body contract: every UPSERTED pk's old band
@@ -359,10 +360,8 @@ def _commit_with_keys(
             reject_target = stored.join(
                 upserted, F.col("_stored_pk") == F.col("_w"), "left_anti"
             )
-            if not old_rows.isEmpty():
-                band_delta["deletes"] = catalog.write_snapshot(
-                    band_table, old_rows
-                )
+            if old_rows.isEmpty():
+                old_rows = None
         if verified:
             # a verification-rejected collision keeps the doc but must
             # NOT persist the colliding key: ``band`` stays a true
@@ -372,19 +371,19 @@ def _commit_with_keys(
             )
         if bucketed:
             band_rows = band_rows.withColumn("bucket", band_bucket(F.col("band")))
-        band_rel = catalog.write_snapshot(
-            band_table,
-            band_rows.select(*band_col_names),
-            band_meta.get("partition_by"),
+        bands = catalog.write_delta(
+            band_meta, band_table, upserts=band_rows.select(*band_col_names), deletes=old_rows
         )
-        band_delta["upserts"] = band_rel
-        docs_meta.setdefault("deltas", []).append({"upserts": docs_rel})
-        band_meta.setdefault("deltas", []).append(band_delta)
-        return docs_rel
+        catalog.append_delta(m, docs_table, docs)
+        catalog.append_delta(m, band_table, bands)
+        return docs["upserts"]
 
-    return retry_cas_commit(
-        catalog, docs_table, band_table, stream_id, batch_id, attempt
+    out = cas_commit(
+        catalog, stream_id, batch_id, (docs_table, band_table), batch, checked, attempt
     )
+    if out is None:
+        return None
+    return {"version": out[0], "n_new": catalog.count_rows(out[1])}
 
 
 def stream_near_dedup_writer(

@@ -72,7 +72,7 @@ def check_delete_references(deleted_table, remaining_target, target_pk, referenc
 
 
 def validate_view(engine, manifest, name, delta):
-    """Full-view reference for ``Engine._check_delta``: every constraint
+    """Full-view reference for ``SnapshotCatalog.check_delta``: every constraint
     over the whole candidate table ``kept ∪ upserts``, then every row of
     the other tables that reference it."""
     tables = manifest["tables"]
@@ -105,8 +105,11 @@ def validate_view(engine, manifest, name, delta):
 
 
 class FullViewEngine(Engine):
-    def _check_delta(self, manifest, name, delta):
-        validate_view(self, manifest, name, delta)
+    def __init__(self, spark, base_dir):
+        super().__init__(spark, base_dir)
+        self.catalog.check_delta = lambda manifest, name, delta: validate_view(
+            self, manifest, name, delta
+        )
 
 
 # ------------------------------------------------------------ statements

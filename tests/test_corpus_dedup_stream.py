@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 
 from entangledb_spark.engine import Engine
-from entangledb_spark.sources.catalog import CatalogError, ConflictError
+from entangledb_spark.sources.catalog import ConflictError
+from entangledb_spark.sources.constraints import ConstraintError
 from entangledb_spark.streaming.corpus_dedup import (
     commit_dedup_batch,
     stream_dedup_writer,
@@ -214,10 +215,25 @@ def test_batch_pk_must_be_unique_and_non_null(spark, engine, rows):
     """Two docs with one PK (different text, so different fingerprints)
     would both land in the docs delta; the batch is rejected instead."""
     v0 = engine.catalog.current_version()
-    with pytest.raises(CatalogError, match="primary key doc_id"):
+    with pytest.raises(ConstraintError, match="for column doc_id in table corpus"):
         commit_dedup_batch(engine.catalog, "corpus", "corpus_fp", "s1", _batch(spark, rows), 0)
     assert engine.catalog.current_version() == v0
     assert _docs(engine) == [] and _fps(engine) == []
+
+
+def test_null_in_not_null_text_column_is_rejected(spark, tmp_path):
+    """The docs delta is checked like an INSERT: a NULL body in a NOT NULL
+    text column fails the batch before anything is written."""
+    e = Engine(spark, str(tmp_path / "nn"))
+    e.execute("CREATE TABLE corpus (doc_id INTEGER PRIMARY KEY, body STRING NOT NULL)")
+    e.execute("CREATE TABLE corpus_fp (fp STRING PRIMARY KEY, doc_id INTEGER)")
+    v0 = e.catalog.current_version()
+    with pytest.raises(ConstraintError, match="NULL value not allowed for column body in table corpus"):
+        commit_dedup_batch(
+            e.catalog, "corpus", "corpus_fp", "s1", _batch(spark, [(1, "a"), (2, None)]), 0
+        )
+    assert e.catalog.current_version() == v0
+    assert _docs(e) == [] and _fps(e) == []
 
 
 def test_delta_chains_are_compacted(spark, engine):

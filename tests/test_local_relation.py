@@ -1,8 +1,8 @@
 """Driver-local rows become Arrow LocalRelations (``session.local_df``): an
 INSERT … VALUES stages a LocalRelation and writes it in one JVM job, its
 values round-trip exactly, and out-of-range integers are engine errors.
-Also: a MERGE counts its rows from the written files' footers, and a
-SELECT page is one bounded collect."""
+Also: a MERGE counts its rows from the written files' footers, a SELECT
+page is one bounded collect, and rows are written through the catalog."""
 
 from __future__ import annotations
 
@@ -60,6 +60,38 @@ def test_create_dataframe_only_in_helper():
     assert len(calls) == 1, calls
     path, line = calls[0]
     assert path == "session.py" and helper.lineno <= line <= helper.end_lineno, calls
+
+
+def test_write_snapshot_only_in_catalog_ctas_and_matviews():
+    """Every write of a managed table's rows goes through the catalog's
+    ``write_delta`` (stored names, partition layout); the only other
+    callers of ``write_snapshot`` write a table's first base (CREATE
+    TABLE AS) or a materialized view's snapshot."""
+    calls = []
+    for d, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            rel = os.path.relpath(path, PKG)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                calls += [
+                    (rel, fn.name)
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "write_snapshot"
+                ]
+    outside = {
+        (rel, name)
+        for rel, name in calls
+        if rel not in (os.path.join("sources", "catalog.py"), "engine_matview.py")
+    }
+    assert outside == {("engine_dml.py", "_create_table_as")}, outside
 
 
 def test_values_insert_stages_a_local_relation(eng, monkeypatch):

@@ -393,6 +393,21 @@ def test_missing_band_table_fails_loudly(spark, engine):
         )
 
 
+def test_null_in_not_null_text_column_is_rejected(spark, tmp_path):
+    """The docs delta is checked like an INSERT: a NULL body in a NOT NULL
+    text column fails the batch before anything is written."""
+    from entangledb_spark.sources.constraints import ConstraintError
+
+    e = Engine(spark, str(tmp_path / "nn"))
+    e.execute("CREATE TABLE corpus (doc_id INTEGER PRIMARY KEY, body STRING NOT NULL)")
+    e.execute("CREATE TABLE corpus_bands (band STRING PRIMARY KEY, doc_id INTEGER)")
+    v0 = e.catalog.current_version()
+    with pytest.raises(ConstraintError, match="NULL value not allowed for column body in table corpus"):
+        _commit(e, spark, [(1, LONG), (2, None)], 0)
+    assert e.catalog.current_version() == v0
+    assert _docs(e) == [] and _bands(e) == []
+
+
 OTHER = (
     "an entirely new revision discussing glacier mass balance models and "
     "the satellite altimetry campaigns that calibrate them across both "

@@ -246,25 +246,113 @@ def test_many_batches_trigger_compaction(spark, engine, tmp_path):
 @pytest.mark.parametrize(
     "rows, error",
     [
-        ([(1, 10), (2, 20), (1, 11)], "2 rows with primary key id = 1"),
-        ([(1, 10), (None, 20)], "NULL primary key id"),
+        ([(1, 10), (2, 20), (1, 11)], "duplicate primary key 1 for column id in table ev"),
+        ([(1, 10), (None, 20)], "NULL value not allowed for column id in table ev"),
     ],
+    ids=["rows0-2 rows with primary key id = 1", "rows1-NULL primary key id"],
 )
 def test_batch_with_duplicate_or_null_pk_is_rejected(spark, engine, rows, error):
     """A delta's upserts must be unique and non-null on the PK: a
     micro-batch that is not fails loudly before any file is written."""
     import os
 
-    from entangledb_spark.sources.catalog import CatalogError
+    from entangledb_spark.sources.constraints import ConstraintError
 
     _mk_table(engine)
     v0 = engine.catalog.current_version()
     data = os.path.join(engine.catalog.base, "data")
     files = sorted(os.walk(data))
     batch = spark.createDataFrame(rows, "id long, v long")
-    with pytest.raises(CatalogError, match=error):
+    with pytest.raises(ConstraintError, match=error):
         commit_stream_batch(engine.catalog, "ev", "s1", batch, 0)
     assert engine.catalog.current_version() == v0
     assert "s1" not in engine.catalog.manifest().get("streams", {})
     assert sorted(os.walk(data)) == files
     assert _rows(engine) == []
+
+
+# --- a batch is typed and checked like an INSERT ---------------------------
+
+
+def _rejected(engine, table, batch, error):
+    """Commit ``batch`` into ``table``: it must fail with ``error`` before
+    anything is published or written."""
+    import os
+
+    from entangledb_spark.sources.constraints import ConstraintError
+
+    cat = engine.catalog
+    v0 = cat.current_version()
+    data = os.path.join(cat.base, "data")
+    files = sorted(os.walk(data))
+    with pytest.raises(ConstraintError, match=error):
+        commit_stream_batch(cat, table, "s1", batch, 0)
+    assert cat.current_version() == v0
+    assert "s1" not in cat.manifest().get("streams", {})
+    assert sorted(os.walk(data)) == files
+
+
+def test_null_in_not_null_column_is_rejected(spark, engine):
+    engine.execute("CREATE TABLE nn (id INTEGER PRIMARY KEY, v INTEGER NOT NULL)")
+    batch = spark.createDataFrame([(1, 10), (2, None)], "id long, v long")
+    _rejected(engine, "nn", batch, "NULL value not allowed for column v in table nn")
+    assert engine.execute("SELECT * FROM nn").rows == []
+
+
+def test_overlong_string_is_rejected(spark, engine):
+    engine.execute("CREATE TABLE st (id INTEGER PRIMARY KEY, s STRING)")
+    batch = spark.createDataFrame([(1, "x" * 2000)], "id long, s string")
+    _rejected(engine, "st", batch, "column s of table st exceeds 1024 bytes")
+    assert engine.execute("SELECT * FROM st").rows == []
+
+
+def test_foreign_key_without_parent_is_rejected(spark, engine):
+    engine.execute("CREATE TABLE p (id INTEGER PRIMARY KEY)")
+    engine.execute("CREATE TABLE c (id INTEGER PRIMARY KEY, pid INTEGER REFERENCES p)")
+    engine.execute("INSERT INTO p VALUES (1)")
+    batch = spark.createDataFrame([(1, 1), (2, 99)], "id long, pid long")
+    _rejected(engine, "c", batch, "referenced primary key 99 in table p does not exist")
+    assert engine.execute("SELECT * FROM c").rows == []
+    ok = spark.createDataFrame([(1, 1), (2, None)], "id long, pid long")
+    commit_stream_batch(engine.catalog, "c", "s1", ok, 0)
+    assert engine.execute("SELECT * FROM c ORDER BY id").rows == [(1, 1), (2, None)]
+
+
+@pytest.mark.parametrize("vtype", ["double", "string"])
+def test_mistyped_batch_is_rejected_and_table_still_reads(spark, engine, vtype):
+    """A batch is not cast into an INTEGER column: a ``double`` or
+    ``string`` written as is would make every read of the table fail."""
+    _mk_table(engine)
+    engine.execute("INSERT INTO ev VALUES (1, 10)")
+    batch = spark.createDataFrame([(2, "20" if vtype == "string" else 20.5)], f"id long, v {vtype}")
+    _rejected(engine, "ev", batch, f"invalid value of type {vtype} for integer column v in table ev")
+    assert _rows(engine) == [(1, 10)]
+
+
+def test_batch_after_rename_column_reads_back(spark, engine):
+    engine.execute("CREATE TABLE rn (id INTEGER PRIMARY KEY, a INTEGER NOT NULL)")
+    engine.execute("INSERT INTO rn VALUES (1, 10)")
+    engine.execute("ALTER TABLE rn RENAME COLUMN a TO alpha")
+    batch = spark.createDataFrame([(2, 20)], "id long, alpha long")
+    commit_stream_batch(engine.catalog, "rn", "s1", batch, 0)
+    rows = engine.execute("SELECT id, alpha FROM rn ORDER BY id").rows
+    assert rows == [(1, 10), (2, 20)]
+
+
+def test_partitioned_batch_reads_back(spark, engine):
+    """A batch into a PARTITION BY table is written in the table's
+    partition layout: an upsert of key 1 and a new key 3 read back by a
+    full scan, a partition-pruned scan and a primary-key read."""
+    engine.execute(
+        "CREATE TABLE pt (id INTEGER PRIMARY KEY, grp INTEGER, v INTEGER) PARTITION BY (grp)"
+    )
+    engine.execute("INSERT INTO pt VALUES (1, 1, 10), (2, 2, 20)")
+    batch = spark.createDataFrame([(1, 1, 11), (3, 1, 30)], "id long, grp long, v long")
+    commit_stream_batch(engine.catalog, "pt", "s1", batch, 0)
+
+    def read(where=""):
+        return engine.execute(f"SELECT id, grp, v FROM pt {where} ORDER BY id").rows
+
+    assert read() == [(1, 1, 11), (2, 2, 20), (3, 1, 30)]
+    assert read("WHERE grp = 1") == [(1, 1, 11), (3, 1, 30)]
+    assert read("WHERE id = 1") == [(1, 1, 11)]
