@@ -24,8 +24,10 @@ delta against the pre-image the statement read (sources/constraints.py):
 the written rows, and the keys it removes, never the whole table — so a
 1-row write costs a bounded probe, not O(table). No row loops over table
 data in Python anywhere; literal VALUES rows, already Python tuples, are
-checked as such, then staged as an Arrow LocalRelation (session.local_df):
-writing it is one JVM job with no Python worker.
+checked as such. A key-addressed write (INSERT … VALUES, or UPDATE/DELETE
+pinning the primary key to literals) reads its pre-image by KeyLookup and
+the driver writes its delta with pyarrow, with no Spark job
+(``SnapshotCatalog.driver_write``).
 """
 
 from __future__ import annotations

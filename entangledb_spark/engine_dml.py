@@ -20,7 +20,7 @@ from entangledb_spark.plans.compiler import (
     compile_statement,
 )
 from entangledb_spark.plans.parser import parse
-from entangledb_spark.session import local_df
+from entangledb_spark.session import arrow_rows, local_df
 from entangledb_spark.sources import constraints as con
 from entangledb_spark.sources.catalog import (
     SPARK_TYPES,
@@ -82,21 +82,25 @@ class DmlStatements:
         schema = schema_of(
             [dict(c, nullable=True) for c in cols]  # NULL checks run separately
         )
-        # an Arrow LocalRelation: writing it runs no Python worker; one
-        # partition, so the delta is one parquet file
-        new_rows = local_df(self.spark, rows, schema).coalesce(1)
+        table = arrow_rows(rows, schema)
+        if self.catalog.driver_write(manifest, stmt) is None:
+            # a partition_by table: Spark writes the rows in its layout
+            # from an Arrow LocalRelation (no Python worker), one partition
+            upserts = new_rows = local_df(self.spark, table, schema).coalesce(1)
+        else:
+            upserts, new_rows = table, lambda: local_df(self.spark, table, schema)
         self.catalog.check_delta(
             manifest,
             stmt.table,
             con.Delta(
                 upserts=new_rows,
-                kept=self.catalog.read_df(manifest, stmt.table),
+                kept=lambda: self.catalog.read_df(manifest, stmt.table),
                 rows=rows,
-                inserting=True,
+                rewritten=(),
             ),
         )
         # merge-on-read: only the new rows hit disk (O(inserted), not O(table))
-        self.catalog.stage_delta(manifest, stmt.table, upserts=new_rows)
+        self.catalog.stage_delta(manifest, stmt.table, upserts=upserts)
         return Result(status=f"INSERT {len(rows)}")
 
     def _insert_select(
@@ -117,7 +121,7 @@ class DmlStatements:
         self.catalog.check_delta(
             manifest,
             stmt.table,
-            con.Delta(upserts=new_rows, kept=self.catalog.read_df(manifest, stmt.table)),
+            con.Delta(upserts=new_rows, kept=lambda: self.catalog.read_df(manifest, stmt.table)),
         )
         delta = self.catalog.stage_delta(manifest, stmt.table, upserts=new_rows)
         n_new = self.catalog.count_rows(delta["upserts"]) if delta else 0
@@ -167,7 +171,8 @@ class DmlStatements:
 
         meta = self._table_meta(manifest, stmt.table, writable=True)
         by_name = {c["name"]: c for c in meta["columns"]}
-        df = self.catalog.read_df(manifest, stmt.table).alias(stmt.table)
+        lookup = self.catalog.driver_write(manifest, stmt)
+        df = self._dml_source(manifest, stmt.table, lookup)
         scope_resolve, scope_type = _single_table_scope(stmt.table, df)
         # SET expressions may carry uncorrelated subqueries too
         # (`SET v = (SELECT max(v) FROM s)`) — fold before type-checking
@@ -224,11 +229,16 @@ class DmlStatements:
                 )
             else:
                 projected.append(F.col(c))
+        pk = self._pk_of(meta)
+        literals = {c: e.value for c, e in stmt.sets if isinstance(e, ast.Literal)}
+        if lookup is not None:
+            matched = flagged.filter(F.col("__upd")).select(*projected, F.col(pk).alias("__old"))
+            return self._update_rows(manifest, stmt.table, meta, matched, updates, literals)
         out = flagged.select(*projected, F.col("__upd"))
         # merge-on-read: write only the changed rows; if the PK itself was
         # assigned, tombstone the old keys in the same delta (upsert wins at
-        # equal rank, so UPDATE pk=pk+1 overlaps resolve correctly)
-        pk = self._pk_of(meta)
+        # equal rank, so UPDATE pk=pk+1 overlaps resolve correctly). Each
+        # of the two writes runs the flagged view again.
         changed = out.filter(F.col("__upd")).drop("__upd")
         old_keys = flagged.filter(F.col("__upd")).select(pk) if pk in updates else None
         self.catalog.check_delta(
@@ -243,9 +253,7 @@ class DmlStatements:
                     else None
                 ),
                 columns=frozenset(updates),
-                literals={
-                    c: e.value for c, e in stmt.sets if isinstance(e, ast.Literal)
-                },
+                literals=literals,
             ),
         )
         delta = self.catalog.stage_delta(
@@ -255,6 +263,56 @@ class DmlStatements:
         # read) instead of a second full-table filter job
         n_matched = self.catalog.count_rows(delta["upserts"]) if delta else 0
         return Result(status=f"UPDATE {n_matched}")
+
+    def _dml_source(self, manifest: dict, name: str, lookup) -> DataFrame:
+        """The rows an UPDATE or DELETE of ``name`` reads, aliased by the
+        table name: the KeyLookup's rows on the driver path
+        (``SnapshotCatalog.driver_write``), else the table's view."""
+        if lookup is not None:
+            return self.catalog.lookup_df(manifest, lookup).alias(name)
+        return self.catalog.read_df(manifest, name).alias(name)
+
+    def _update_rows(
+        self, manifest: dict, name: str, meta: dict, matched: DataFrame, updates, literals
+    ) -> Result:
+        """UPDATE's driver path: ``matched`` (each updated row, then its
+        old key as ``__old``) is WHERE and SET compiled over the
+        KeyLookup's LocalRelation, which Catalyst folds, so collecting it
+        runs no job. Upserts and, for a re-key, the old keys' tombstones
+        are written from these one collected rows with pyarrow; a check
+        that needs the kept rows reads the view without them."""
+        pk = self._pk_of(meta)
+        got = [tuple(r) for r in matched.collect()]
+        rows = [r[:-1] for r in got]
+        old = tuple(r[-1] for r in got)
+        schema = schema_of([dict(c, nullable=True) for c in meta["columns"]])
+        upserts = arrow_rows(rows, schema)
+        deletes = removed = None
+        if pk in updates:
+            key_schema = _key_schema(meta)
+            deletes = arrow_rows([(k,) for k in old], key_schema)
+            i = [c["name"] for c in meta["columns"]].index(pk)
+            new_keys = {r[i] for r in rows}
+            gone = [(k,) for k in old if k not in new_keys]
+            if gone:
+                removed = lambda: local_df(self.spark, gone, key_schema)  # noqa: E731
+        self.catalog.check_delta(
+            manifest,
+            name,
+            con.Delta(
+                upserts=lambda: local_df(self.spark, upserts, schema),
+                kept=lambda: self.catalog.read_df(manifest, name).filter(
+                    ~F.col(pk).isin(list(old))
+                ),
+                removed=removed,
+                rows=rows,
+                columns=frozenset(updates),
+                literals=literals,
+                rewritten=old,
+            ),
+        )
+        self.catalog.stage_delta(manifest, name, upserts=upserts, deletes=deletes)
+        return Result(status=f"UPDATE {len(rows)}")
 
     # ---------------------------------------------------------- COPY
 
@@ -542,7 +600,8 @@ class DmlStatements:
     def _delete(self, manifest: dict, stmt: ast.Delete) -> Result:
         meta = self._table_meta(manifest, stmt.table, writable=True)
         pk = self._pk_of(meta)
-        df = self.catalog.read_df(manifest, stmt.table).alias(stmt.table)
+        lookup = self.catalog.driver_write(manifest, stmt)
+        df = self._dml_source(manifest, stmt.table, lookup)
         scope_resolve, scope_type = _single_table_scope(stmt.table, df)
         where = self._fold_dml_subqueries(manifest, stmt.where)
         pred = (
@@ -550,24 +609,35 @@ class DmlStatements:
             if where is not None
             else F.lit(True)
         )
-        removed = df.filter(pred).select(pk)
+        removed = deletes = df.filter(pred).select(pk)
+        kept = df.filter(~F.coalesce(pred, F.lit(False)))
+        if lookup is not None:
+            # the driver path: the removed keys fold over the KeyLookup's
+            # LocalRelation (no job); pyarrow writes their tombstones
+            keys = [r[0] for r in removed.collect()]
+            key_schema = _key_schema(meta)
+            deletes = arrow_rows([(k,) for k in keys], key_schema)
+            removed = lambda: local_df(self.spark, deletes, key_schema)  # noqa: E731
+            kept = lambda: self.catalog.read_df(manifest, stmt.table).filter(  # noqa: E731
+                ~F.col(pk).isin(keys)
+            )
         # delete-side FK: no surviving row may reference a removed key
         # (engine/kv.rs:157-176)
         self.catalog.check_delta(
-            manifest,
-            stmt.table,
-            con.Delta(
-                kept=df.filter(~F.coalesce(pred, F.lit(False))),
-                removed=removed,
-                deleting=True,
-            ),
+            manifest, stmt.table, con.Delta(kept=kept, removed=removed, deleting=True)
         )
         # merge-on-read: write only the tombstoned keys; the matched count
         # comes from the written delta's parquet footers (no extra filter job)
-        delta = self.catalog.stage_delta(manifest, stmt.table, deletes=removed)
+        delta = self.catalog.stage_delta(manifest, stmt.table, deletes=deletes)
         n_matched = self.catalog.count_rows(delta["deletes"]) if delta else 0
         return Result(status=f"DELETE {n_matched}")
 
+
+
+def _key_schema(meta: dict):
+    """The nullable primary-key column of table entry ``meta``: the
+    schema of its tombstones."""
+    return schema_of([dict(c, nullable=True) for c in meta["columns"] if c["primary_key"]])
 
 
 def _merge_scope(tables: dict):

@@ -40,7 +40,10 @@ class ExplainStatements:
         """Our logical plan pretty-printer (plan shape mirrors plan/mod.rs:
         258-415) + Spark's physical plan for SELECTs."""
         query = isinstance(stmt, (ast.Select, ast.SetOp, ast.With))
-        read, lookup = self._query_reader(stmt) if query else (None, None)
+        if query:
+            read, lookup = self._query_reader(stmt)
+        else:
+            lookup = self.catalog.driver_write(self._manifest_for_read(), stmt)
         lines = _format_plan(stmt, lookup=lookup)
         if query:
             import contextlib
@@ -133,8 +136,16 @@ def _walk_executed_plan(node, depth: int, out: list) -> None:
 
 def _format_plan(stmt: ast.Statement, indent: int = 0, lookup=None) -> list[str]:
     """The logical plan of ``stmt``; ``lookup`` is the KeyLookup that
-    serves its FROM table (``SnapshotCatalog.key_lookup``), if any."""
+    serves its FROM table (``SnapshotCatalog.key_lookup``), or an UPDATE's
+    or DELETE's pre-image (``SnapshotCatalog.driver_write``), if any."""
     pad = "  " * indent
+    if isinstance(stmt, (ast.Update, ast.Delete)):
+        lines = [f"{pad}{type(stmt).__name__} {stmt.table}"]
+        if isinstance(stmt, ast.Update):
+            lines.append(f"{pad}  Set {[f'{c} = {e}' for c, e in stmt.sets]}")
+        if stmt.where is not None:
+            lines.append(f"{pad}  Filter {stmt.where}")
+        return lines + _format_from(ast.TableRef(stmt.table), indent + 1, lookup)
     if isinstance(stmt, ast.With):
         kw = "With Recursive" if stmt.recursive else "With"
         lines = [f"{pad}{kw}"]

@@ -35,7 +35,9 @@ A query that pins the primary key to literals (``WHERE pk = 1``, ``pk IN
 rows from the base and delta files with pyarrow, resolves the chain by
 the same rank rule, and hands the compiler a LocalRelation, so the query
 runs no Spark job. Above LOOKUP_BYTES of files it is the Spark scan with
-``pk IN (…)`` row-group pruning.
+``pk IN (…)`` row-group pruning. An UPDATE or DELETE pinned the same way
+reads its pre-image by the same KeyLookup, and it and INSERT … VALUES
+write their delta from the driver with pyarrow (``driver_write``).
 """
 
 from __future__ import annotations
@@ -226,6 +228,10 @@ def _pinned_keys(e: ast.Expr, pk: str, qualifier: str) -> Optional[list]:
     return [a.value for a in lits]
 
 
+def _has_subquery(roots) -> bool:
+    return any(isinstance(x, ast.Subquery) for r in roots if r is not None for x in ast.walk(r))
+
+
 def _row_differs(new: list[str], old: list[str]) -> str:
     """SQL: the row of columns ``new`` differs null-safely from the row of
     columns ``old`` (NaN equals NaN, as in every Spark comparison)."""
@@ -358,6 +364,18 @@ class SnapshotCatalog:
     # rewritten as a new base, so read amplification and the keys a read
     # holds stay bounded. This is the Delta-Lake / Iceberg merge-on-read
     # shape in miniature.
+    #
+    # A delta is written one of two ways, both through ``stage_delta`` →
+    # ``write_delta`` (stored names, then the chain and compaction rule):
+    # - from the driver: Arrow rows the statement holds, one parquet file
+    #   per file set written with pyarrow, no Spark job. The rule
+    #   (``driver_write``): INSERT … VALUES, and an UPDATE or DELETE whose
+    #   pre-image is a KeyLookup, into a table without ``partition_by``;
+    # - by Spark (``write_snapshot``): every other write — INSERT …
+    #   SELECT, MERGE, a range UPDATE or DELETE, the stream writers, a
+    #   ``partition_by`` table's upserts — and every compaction.
+    # Readers cannot tell the two apart: the files hold the stored schema
+    # either way, and a chain may mix them.
 
     COMPACT_AFTER = 8
     # Delta rows (hence keys) a chain may hold before it compacts. A read
@@ -619,13 +637,53 @@ class SnapshotCatalog:
             return None
         roots = [e for e, _ in stmt.select] + [stmt.where, stmt.having]
         roots += [*stmt.group_by, *(o.expr for o in stmt.order_by)]
-        if any(isinstance(x, ast.Subquery) for r in roots if r is not None for x in ast.walk(r)):
+        if _has_subquery(roots):
             return None
-        pk = self._pk_of(t)
-        for conjunct in _conjuncts(stmt.where):
-            keys = _pinned_keys(conjunct, pk, ref.alias or ref.name)
+        return self._pinned_lookup(manifest, ref.name, ref.alias or ref.name, stmt.where)
+
+    def driver_write(self, manifest: dict, stmt) -> Optional[KeyLookup]:
+        """How DML ``stmt`` against ``manifest`` builds and writes its
+        delta — the one decision for execution and EXPLAIN. A KeyLookup
+        means the driver path: the statement's pre-image is the
+        KeyLookup's rows (``lookup_df``, collected with no job), and its
+        delta is Arrow rows that ``write_delta`` writes with pyarrow. None
+        means the Spark path: the pre-image is the view (``read_df``) and
+        Spark writes the delta.
+
+        The driver path takes INSERT … VALUES into a managed table without
+        ``partition_by`` (its pre-image is empty: a KeyLookup of no keys),
+        and an UPDATE or DELETE with no subquery whose WHERE has a
+        top-level conjunct pinning the primary key to literals
+        (``_pinned_keys``), where ``plan_lookup`` accepts the table. What
+        its constraint checks cost is ``check_delta``'s affair: a check
+        that needs the kept rows or a referencing table still reads them
+        with Spark."""
+        t = manifest["tables"].get(getattr(stmt, "table", None))
+        if t is None or t.get("external") or t.get("partition_by"):
+            return None
+        if isinstance(stmt, ast.Insert):
+            return KeyLookup(stmt.table, ()) if stmt.query is None else None
+        if isinstance(stmt, ast.Update):
+            roots = [stmt.where, *(e for _, e in stmt.sets)]
+        elif isinstance(stmt, ast.Delete):
+            roots = [stmt.where]
+        else:
+            return None
+        if _has_subquery(roots):
+            return None
+        return self._pinned_lookup(manifest, stmt.table, stmt.table, stmt.where)
+
+    def _pinned_lookup(
+        self, manifest: dict, name: str, qualifier: str, where: Optional[ast.Expr]
+    ) -> Optional[KeyLookup]:
+        """The KeyLookup of the keys the first top-level conjunct of
+        ``where`` pins table ``name``'s primary key to (``_pinned_keys``;
+        ``qualifier`` is how the statement names the table), or None."""
+        pk = self._pk_of(manifest["tables"][name])
+        for conjunct in _conjuncts(where):
+            keys = _pinned_keys(conjunct, pk, qualifier)
             if keys is not None:
-                return self.plan_lookup(manifest, ref.name, keys)
+                return self.plan_lookup(manifest, name, keys)
         return None
 
     def plan_lookup(self, manifest: dict, name: str, keys: list) -> Optional[KeyLookup]:
@@ -727,49 +785,76 @@ class SnapshotCatalog:
         by_name = {c["name"]: c for c in meta["columns"]}
         return [physical_name(by_name.get(p, {"name": p})) for p in meta.get("partition_by") or []]
 
-    def write_delta(
-        self,
-        meta: dict,
-        name: str,
-        upserts: Optional[DataFrame] = None,
-        deletes: Optional[DataFrame] = None,
-    ) -> Optional[dict]:
+    def write_delta(self, meta: dict, name: str, upserts=None, deletes=None) -> Optional[dict]:
         """Write logical-named ``upserts`` (full rows) and ``deletes`` (PK
         tombstones) of table ``name`` (entry ``meta``) as file sets in the
         table's stored layout: physical column names, and the upserts
-        partitioned like every other file set of the table. Returns the
-        delta entry ({'upserts': path, 'deletes': path}), None when both
-        are None. Every writer of a managed table's rows comes here;
-        whether a delta may be published is ``check_delta``'s call."""
+        partitioned like every other file set of the table. Each is a
+        DataFrame, which Spark writes (``write_snapshot``), or a
+        ``pyarrow.Table``, which the driver writes (``_write_arrow``).
+        Returns the delta entry ({'upserts': path, 'deletes': path}), None
+        when both are None. Every writer of a managed table's rows comes
+        here; whether a delta may be published is ``check_delta``'s call."""
         delta: dict = {}
-        if upserts is not None:
-            delta["upserts"] = self.write_snapshot(
-                name, self._to_physical(upserts, meta["columns"]), self._partition_cols(meta)
-            )
-        if deletes is not None:
-            # tombstones carry only the pk — never partition-encoded
-            delta["deletes"] = self.write_snapshot(
-                name, self._to_physical(deletes, meta["columns"])
-            )
+        # tombstones carry only the pk — never partition-encoded
+        for kind, rows, parts in (
+            ("upserts", upserts, self._partition_cols(meta)),
+            ("deletes", deletes, []),
+        ):
+            if rows is None:
+                continue
+            if isinstance(rows, DataFrame):
+                phys = self._to_physical(rows, meta["columns"])
+                delta[kind] = self.write_snapshot(name, phys, parts)
+            else:
+                if parts:
+                    raise CatalogError(f"rows of partitioned table {name} are written by Spark")
+                delta[kind] = self._write_arrow(name, rows, meta["columns"])
         return delta or None
+
+    def _write_arrow(self, name: str, rows, columns: list[dict]) -> str:
+        """Write the logical-named ``pyarrow.Table`` ``rows`` of table
+        ``name`` (column list ``columns``) as a new file set of ONE
+        parquet file, on the driver with pyarrow: renamed to the stored
+        names and cast to the stored types, every field nullable as in
+        ``lookup_df``. Returns its manifest-relative path. A 1-row file
+        took 0.5 ms on a 4-core VM, against 160–218 ms for the Spark
+        write job of the same rows."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        by_name = {c["name"]: c for c in columns}
+        stored = to_arrow_schema(
+            schema_of([dict(by_name[n], nullable=True) for n in rows.column_names], physical=True)
+        )
+        rel = os.path.join("data", name, uuid.uuid4().hex[:12])
+        os.makedirs(os.path.join(self.base, rel))
+        # FLOAT columns get neither min/max statistics nor a dictionary:
+        # Spark prunes row groups by both, and would drop rows that `=`
+        # matches — Arrow's min/max leave NaN out, and the dictionary test
+        # tells -0.0 from 0.0
+        exact = [f.name for f in stored if not pa.types.is_floating(f.type)]
+        pq.write_table(
+            rows.rename_columns(stored.names).cast(stored),
+            os.path.join(self.base, rel, "part-00000.parquet"),
+            write_statistics=exact,
+            use_dictionary=exact,
+        )
+        return rel
 
     def append_delta(self, manifest: dict, name: str, delta: dict) -> None:
         """Put the written ``delta`` (``write_delta``) at the end of table
         ``name``'s chain in the pending ``manifest``."""
         manifest["tables"][name].setdefault("deltas", []).append(delta)
 
-    def stage_delta(
-        self,
-        manifest: dict,
-        name: str,
-        upserts: Optional[DataFrame] = None,
-        deletes: Optional[DataFrame] = None,
-    ) -> Optional[dict]:
+    def stage_delta(self, manifest: dict, name: str, upserts=None, deletes=None) -> Optional[dict]:
         """Append a merge-on-read delta (O(changed rows) write), compacting
-        into a fresh base when the delta chain gets long. Returns the delta
-        entry ({'upserts': path, 'deletes': path}) so callers can report
-        row counts from the written files' footers instead of re-running
-        the matching job."""
+        into a fresh base when the delta chain gets long. ``upserts`` and
+        ``deletes`` are DataFrames or Arrow tables (``write_delta``).
+        Returns the delta entry ({'upserts': path, 'deletes': path}) so
+        callers can report row counts from the written files' footers
+        instead of re-running the matching job."""
         meta = manifest["tables"][name]
         delta = self.write_delta(meta, name, upserts, deletes)
         if delta is None:
@@ -784,7 +869,8 @@ class SnapshotCatalog:
         (sources/constraints.py), against the pending ``manifest``: its
         views are read with ``read_df`` and pinned keys with
         ``read_keys_df``. The checks are distributed jobs over the change,
-        or none at all; the table view itself is never collected."""
+        driver-side checks of the rows a statement holds, or none at all;
+        the table view itself is never collected."""
         con.check_delta(
             name,
             manifest["tables"],

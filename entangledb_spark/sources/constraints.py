@@ -12,13 +12,16 @@ statement is ``kept ∪ upserts``; ``kept`` already satisfies every
 constraint, so a violation needs a written or a removed row:
 
 - NOT NULL + string length: the upserts only, and for UPDATE only the
-  SET columns that are not a non-null literal within the limit. Literal
-  ``INSERT … VALUES`` rows are checked in Python, with no Spark job.
+  SET columns that are not a non-null literal within the limit. Upserts
+  the driver holds as Python rows (``INSERT … VALUES``, and an UPDATE
+  whose pre-image is a KeyLookup) are checked in Python, with no Spark
+  job.
 - PRIMARY KEY / UNIQUE: duplicates inside the upserts, then upsert
   values that a kept row already holds — probed with ``col IN (…)`` when
-  the values are literals, else a semi-join. An INSERT's kept rows are
-  the whole table, so its literal primary keys are probed by reading
-  just those keys' rows (the catalog's KeyLookup, on the driver).
+  the values are literals, else a semi-join. Where the kept rows are the
+  view without the rows the statement rewrites, literal primary keys are
+  probed by reading just those keys' rows (the catalog's KeyLookup, on
+  the driver) and leaving the rewritten ones out.
 - FOREIGN KEY, child side: the upserts' distinct values anti-joined
   against the parent's keys (for a self-reference the parent is
   ``kept ∪ upserts``; NaN skips the check, schema.rs:248); literal
@@ -29,7 +32,8 @@ constraint, so a violation needs a written or a removed row:
 
 Each check is a bounded aggregate or join over the change, not over the
 table, and runs against the exact snapshot being published, so it stays
-correct under concurrency.
+correct under concurrency. The NOT NULL, length and in-delta uniqueness
+checks of the upserts share ONE aggregate job.
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Any, Callable, Optional
+from typing import Any, Callable, Optional, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +53,10 @@ class ConstraintError(ValueError):
     pass
 
 
+# a DataFrame, or a function that builds it (see ``Delta.frame``)
+Frame = Union[DataFrame, Callable[[], DataFrame]]
+
+
 @dataclass
 class Delta:
     """One statement's change to one table, as the checks see it.
@@ -57,24 +65,37 @@ class Delta:
     neither overwrites nor removes (None: none). ``removed`` holds the old
     primary keys it tombstones or re-keys and does not write again, in a
     column named like the PK. ``rows`` are the upserts as Python tuples in
-    column order when they are literals (INSERT … VALUES). ``columns``
-    names the columns whose values can change (None: all), ``literals``
-    the ones an UPDATE sets to a literal. ``deleting`` marks a DELETE,
-    whose referenced-key error names the removal. ``inserting`` marks an
-    INSERT, whose ``kept`` is the table's whole view: its literal primary
-    keys are probed by reading just their rows. ``upserting`` marks an
-    upsert by primary key (a stream batch), whose ``kept`` holds no key of
-    the upserts: its primary key cannot clash with a kept row."""
+    column order when the driver holds them (INSERT … VALUES, an UPDATE
+    read by KeyLookup). ``columns`` names the columns whose values can
+    change (None: all), ``literals`` the ones an UPDATE sets to a literal.
+    ``deleting`` marks a DELETE, whose referenced-key error names the
+    removal. ``rewritten`` holds the primary keys of the pre-image rows
+    the statement writes again or removes when ``kept`` is the view
+    without exactly those rows (``()`` for an INSERT): literal primary
+    keys are then probed by reading just their rows. ``upserting`` marks
+    an upsert by primary key (a stream batch), whose ``kept`` holds no key
+    of the upserts: its primary key cannot clash with a kept row."""
 
-    upserts: Optional[DataFrame] = None
-    kept: Optional[DataFrame] = None
-    removed: Optional[DataFrame] = None
+    upserts: Optional[Frame] = None
+    kept: Optional[Frame] = None
+    removed: Optional[Frame] = None
     rows: Optional[list] = None
     columns: Optional[frozenset] = None
     literals: dict = field(default_factory=dict)
     deleting: bool = False
-    inserting: bool = False
+    rewritten: Optional[tuple] = None
     upserting: bool = False
+
+    def frame(self, name: str) -> Optional[DataFrame]:
+        """Frame field ``name`` (``upserts``, ``kept`` or ``removed``) as
+        a DataFrame, built on first use: a check that does not need a
+        frame never pays for it (a view's chain-keys read, a
+        LocalRelation of driver rows)."""
+        value = getattr(self, name)
+        if callable(value):
+            value = value()
+            setattr(self, name, value)
+        return value
 
 
 def _null_error(name: str, col: str) -> ConstraintError:
@@ -106,7 +127,14 @@ def _removal_error(target: str, table: str, col: str, value: Any) -> ConstraintE
     )
 
 
-def check_not_null_and_length(name: str, df: DataFrame, columns: list[dict]) -> None:
+def _upsert_checks(
+    name: str, df: DataFrame, columns: list[dict], unique: list[dict]
+) -> dict:
+    """NOT NULL and string length of ``columns`` in ``df`` — the first
+    violation in column order raises, NULL before length — and
+    {column: (non-null count, distinct count)} of the ``unique`` columns
+    (a column has duplicates iff the first exceeds the second; both skip
+    NULLs), all in ONE aggregate job, or none when nothing is checked."""
     aggs = []
     for c in columns:
         if not c["nullable"]:
@@ -115,8 +143,11 @@ def check_not_null_and_length(name: str, df: DataFrame, columns: list[dict]) -> 
             )
         if c["datatype"] == "STRING":
             aggs.append(F.max(F.octet_length(c["name"])).alias(f"len__{c['name']}"))
+    for c in unique:
+        aggs.append(F.count(c["name"]).alias(f"n__{c['name']}"))
+        aggs.append(F.count_distinct(c["name"]).alias(f"d__{c['name']}"))
     if not aggs:
-        return
+        return {}
     row = df.agg(*aggs).first().asDict()
     for k, v in row.items():
         kind, col = k.split("__", 1)
@@ -124,6 +155,11 @@ def check_not_null_and_length(name: str, df: DataFrame, columns: list[dict]) -> 
             raise _null_error(name, col)
         if kind == "len" and v is not None and v > MAX_STRING_BYTES:
             raise _length_error(name, col)
+    return {c["name"]: (row[f"n__{c['name']}"], row[f"d__{c['name']}"]) for c in unique}
+
+
+def check_not_null_and_length(name: str, df: DataFrame, columns: list[dict]) -> None:
+    _upsert_checks(name, df, columns, [])
 
 
 def _check_rows_not_null_and_length(name: str, rows: list, columns: list[dict]) -> None:
@@ -157,16 +193,6 @@ def _duplicate_value(df: DataFrame, col: str) -> Any:
     )
 
 
-def _value_counts(df: DataFrame, columns: list[dict]) -> dict:
-    """{column: (non-null count, distinct count)} in ONE aggregate job."""
-    aggs = []
-    for c in columns:
-        aggs.append(F.count(c["name"]).alias(f"n__{c['name']}"))
-        aggs.append(F.count_distinct(c["name"]).alias(f"d__{c['name']}"))
-    row = df.agg(*aggs).first().asDict()
-    return {c["name"]: (row[f"n__{c['name']}"], row[f"d__{c['name']}"]) for c in columns}
-
-
 def check_unique(name: str, df: DataFrame, columns: list[dict]) -> None:
     """One aggregate job for ALL unique/PK columns: a column has duplicates
     iff count(col) > count(DISTINCT col) (both skip NULLs — NULLs are
@@ -175,7 +201,7 @@ def check_unique(name: str, df: DataFrame, columns: list[dict]) -> None:
     unique_cols = [c for c in columns if c["primary_key"] or c["unique"]]
     if not unique_cols:
         return
-    counts = _value_counts(df, unique_cols)
+    counts = _upsert_checks(name, df, [], unique_cols)
     for c in unique_cols:
         n, d = counts[c["name"]]
         if n > d:
@@ -267,49 +293,59 @@ def check_delta(
     columns = tables[name]["columns"]
     pk = next(c["name"] for c in columns if c["primary_key"])
     changing = [c for c in columns if delta.columns is None or c["name"] in delta.columns]
-    ups, kept, rows = delta.upserts, delta.kept, delta.rows
-
-    if rows is not None:
-        _check_rows_not_null_and_length(name, rows, columns)
-    elif ups is not None:
-        check_not_null_and_length(
-            name, ups, [c for c in changing if not _settled(delta.literals.get(c["name"]))]
-        )
-
+    rows = delta.rows
     unique_cols = [c for c in changing if c["primary_key"] or c["unique"]]
-    if unique_cols and ups is not None:
+
+    def ups() -> DataFrame:
+        return delta.frame("upserts")
+
+    def kept() -> DataFrame:
+        return delta.frame("kept")
+
+    if delta.upserts is not None:
         if rows is not None:
+            _check_rows_not_null_and_length(name, rows, columns)
             known = {c["name"]: _row_values(rows, columns, c) for c in unique_cols}
             counts = {n: (len(v), len({_group_key(x) for x in v})) for n, v in known.items()}
         else:
+            counts = _upsert_checks(
+                name,
+                ups(),
+                [c for c in changing if not _settled(delta.literals.get(c["name"]))],
+                unique_cols,
+            )
             known = {n: [v] for n, v in delta.literals.items() if v is not None}
-            counts = _value_counts(ups, unique_cols)
         for c in unique_cols:
             col = c["name"]
             n, d = counts[col]
             if n > d:
-                dupe = _first_repeat(known[col]) if rows is not None else _duplicate_value(ups, col)
+                dupe = _first_repeat(known[col]) if rows is not None else _duplicate_value(ups(), col)
                 raise _duplicate_error(name, c, dupe)
-            if n == 0 or kept is None or (c["primary_key"] and delta.upserting):
+            if n == 0 or delta.kept is None or (c["primary_key"] and delta.upserting):
                 continue
-            if col in known and c["primary_key"] and delta.inserting:
+            if col in known and c["primary_key"] and delta.rewritten is not None:
                 clash = probe(name, known[col])
+                if delta.rewritten:
+                    clash = clash.filter(~F.col(col).isin(list(delta.rewritten)))
             elif col in known:
-                clash = kept.filter(F.col(col).isin(known[col]))
+                clash = kept().filter(F.col(col).isin(known[col]))
             else:
-                clash = kept.join(ups.select(col), on=col, how="left_semi")
+                clash = kept().join(ups().select(col), on=col, how="left_semi")
             hit = clash.select(col).limit(1).collect()
             if hit:
                 raise _duplicate_error(name, c, hit[0][0])
 
-    removed = delta.removed
     referencing = [
         (t, c) for t, meta in tables.items() for c in meta["columns"] if c["references"] == name
     ]
 
+    def removed() -> DataFrame:
+        return delta.frame("removed")
+
     def after() -> DataFrame:
         """The table after the statement: kept ∪ upserts."""
-        return reduce(DataFrame.unionByName, [d for d in (kept, ups) if d is not None])
+        parts = [delta.frame(f) for f in ("kept", "upserts")]
+        return reduce(DataFrame.unionByName, [d for d in parts if d is not None])
 
     def parent_pk(table: str) -> str:
         return next(c["name"] for c in tables[table]["columns"] if c["primary_key"])
@@ -323,7 +359,7 @@ def check_delta(
         # DELETE: every referencing column in manifest order, like the
         # reverse-index scan of the reference
         for t, c in referencing:
-            v = _referenced(after() if t == name else read(t), c["name"], removed, pk)
+            v = _referenced(after() if t == name else read(t), c["name"], removed(), pk)
             if v is not None:
                 raise _removal_error(name, t, c["name"], v)
         return
@@ -331,21 +367,21 @@ def check_delta(
     for c in columns:
         if c["references"] is None:
             continue
-        if ups is not None and c in changing:
+        if delta.upserts is not None and c in changing:
             if rows is not None and c["references"] != name:
                 _check_literal_references(
                     name, c, _row_values(rows, columns, c), probe, parent_pk(c["references"])
                 )
             else:
-                check_foreign_keys(name, ups, [c], parent)
-        if c["references"] == name and removed is not None:
+                check_foreign_keys(name, ups(), [c], parent)
+        if c["references"] == name and delta.removed is not None:
             # a row the table keeps must not point at a key this write removes
-            v = _referenced(after(), c["name"], removed, pk)
+            v = _referenced(after(), c["name"], removed(), pk)
             if v is not None:
                 raise _missing_error(name, c, v)
-    if removed is not None:
+    if delta.removed is not None:
         for t, c in referencing:
             if t != name:
-                v = _referenced(read(t), c["name"], removed, pk)
+                v = _referenced(read(t), c["name"], removed(), pk)
                 if v is not None:
                     raise _removal_error(name, t, c["name"], v)

@@ -92,8 +92,17 @@ def check_upserts(catalog: SnapshotCatalog, manifest: dict, name: str, rows: Dat
     Rows must be unique and non-null on the PK — the merge-on-read resolve
     keeps every row of a delta no later write touches."""
     pk = catalog._pk_of(manifest["tables"][name])
-    kept = catalog.read_df(manifest, name).join(rows.select(pk), pk, "left_anti")
-    catalog.check_delta(manifest, name, Delta(upserts=rows, kept=kept, upserting=True))
+    catalog.check_delta(
+        manifest,
+        name,
+        Delta(
+            upserts=rows,
+            # read only by a check that needs it: a non-PK UNIQUE column or
+            # a self-referencing FOREIGN KEY
+            kept=lambda: catalog.read_df(manifest, name).join(rows.select(pk), pk, "left_anti"),
+            upserting=True,
+        ),
+    )
 
 
 def cas_commit(

@@ -83,7 +83,7 @@ def validate_view(engine, manifest, name, delta):
     def read(table):
         return engine.catalog.read_df(manifest, table)
 
-    parts = [d for d in (delta.kept, delta.upserts) if d is not None]
+    parts = [d for d in (delta.frame("kept"), delta.frame("upserts")) if d is not None]
     candidate = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     cols, pk = tables[name]["columns"], pk_of(name)
     referencing = [

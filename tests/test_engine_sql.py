@@ -340,6 +340,16 @@ def test_explain(eng):
     r = eng.execute("EXPLAIN SELECT title FROM movies WHERE id > 1")
     text = "\n".join(t[0] for t in r.rows)
     assert "Scan movies" in text and "KeyLookup" not in text
+    # a write names the path its pre-image is read by; nothing runs
+    r = eng.execute("EXPLAIN UPDATE movies SET rating = 1.0 WHERE id IN (1, 2) AND released > 0")
+    lines = [t[0] for t in r.rows]
+    assert lines[0] == "Update movies" and "  KeyLookup movies keys=[1, 2]" in lines, lines
+    assert not any("Scan" in line for line in lines), lines
+    r = eng.execute("EXPLAIN DELETE FROM movies WHERE released > 2000")
+    lines = [t[0] for t in r.rows]
+    assert lines[0] == "Delete movies" and "  Scan movies" in lines, lines
+    assert not any("KeyLookup" in line for line in lines), lines
+    assert eng.execute("SELECT count(*) FROM movies WHERE rating = 1.0").rows == [(0,)]
 
 
 def test_explain_analyze(eng):

@@ -210,13 +210,13 @@ def test_pinned_select_runs_no_job(spark, eng):
     assert got == [("b", 42)]
 
 
-def test_values_insert_into_a_chain_runs_one_job(spark, eng):
-    """Its primary-key probe reads the pinned keys on the driver; the
-    write is the statement's only job."""
+def test_values_insert_into_a_chain_runs_no_job(spark, eng):
+    """Its primary-key probe reads the pinned keys on the driver, and the
+    driver writes its delta with pyarrow."""
     eng.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, s STRING)")
     eng.execute("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
     eng.execute("DELETE FROM t WHERE id = 2")
-    assert jobs(spark, lambda: eng.execute("INSERT INTO t VALUES (3, 'c')")) == 1
+    assert jobs(spark, lambda: eng.execute("INSERT INTO t VALUES (3, 'c')")) == 0
     # the probe sees base, delta and tombstone alike
     with pytest.raises(EngineError, match="duplicate primary key 1"):
         eng.execute("INSERT INTO t VALUES (1, 'x')")

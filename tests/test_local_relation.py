@@ -94,8 +94,14 @@ def test_write_snapshot_only_in_catalog_ctas_and_matviews():
     assert outside == {("engine_dml.py", "_create_table_as")}, outside
 
 
-def test_values_insert_stages_a_local_relation(eng, monkeypatch):
+def test_values_insert_stages_arrow_rows(eng, monkeypatch):
+    """The rows reach ``stage_delta`` as an Arrow table, which the driver
+    writes with pyarrow; into a ``partition_by`` table they are an Arrow
+    LocalRelation that Spark writes."""
+    import pyarrow as pa
+
     eng.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, s STRING)")
+    eng.execute("CREATE TABLE p (id INTEGER PRIMARY KEY, g STRING) PARTITION BY (g)")
     staged = []
     stage = eng.catalog.stage_delta
 
@@ -105,17 +111,21 @@ def test_values_insert_stages_a_local_relation(eng, monkeypatch):
 
     monkeypatch.setattr(eng.catalog, "stage_delta", record)
     eng.execute("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
-    (frame,) = staged
+    eng.execute("INSERT INTO p VALUES (1, 'a'), (2, 'b')")
+    arrow, frame = staged
+    assert isinstance(arrow, pa.Table)
+    assert arrow.to_pylist() == [{"id": 1, "s": "a"}, {"id": 2, "s": "b"}]
     plan = frame._jdf.queryExecution().analyzed().toString()
     assert "LocalRelation" in plan, plan
     assert "LogicalRDD" not in plan, plan
+    assert sorted(eng.execute("SELECT * FROM p").rows) == [(1, "a"), (2, "b")]
 
 
-def test_insert_into_fresh_table_runs_one_job(spark, eng):
-    """The constraint probe of an empty pre-image runs on the driver; the
-    write is the statement's only job."""
+def test_insert_into_fresh_table_runs_no_job(spark, eng):
+    """The constraint probe of an empty pre-image runs on the driver, and
+    the driver writes the delta with pyarrow."""
     eng.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, s STRING NOT NULL, u INTEGER UNIQUE)")
-    assert jobs(spark, lambda: eng.execute("INSERT INTO t VALUES (1, 'a', 10)")) == 1
+    assert jobs(spark, lambda: eng.execute("INSERT INTO t VALUES (1, 'a', 10)")) == 0
     assert eng.execute("SELECT * FROM t").rows == [(1, "a", 10)]
 
 
@@ -229,9 +239,10 @@ def test_merge_counts_from_footers(spark, eng):
     # checks, cardinality probe and write(s), plus the split count for
     # `both`; counting rows with count() cost two more jobs in each. A
     # plan that reads a view with deltas broadcasts the chain's keys, and
-    # without AQE each broadcast is a job of its own (with AQE on the
-    # four MERGEs run 13, 30, 23 and 8 jobs)
-    assert counted == {insert: 10, both: 24, update: 18, delete: 6}, counted
+    # without AQE each broadcast is a job of its own. The upserts' NOT
+    # NULL, length and UNIQUE checks are one aggregate: a second one cost
+    # 2, 6 and 3 more jobs (10, 24 and 18) with its broadcasts
+    assert counted == {insert: 8, both: 18, update: 15, delete: 6}, counted
 
 
 def test_fetch_truncates_and_keeps_order(eng):
